@@ -76,25 +76,22 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-def _par(spark: SparkSession, df: DataFrame) -> DataFrame:
-    """Scan-parallelism floor for COMPUTE-HEAVY narrow plans.
+def _par(df: DataFrame) -> DataFrame:
+    """Scan-parallelism floor (:func:`dedup._floor_parallelism`) for
+    COMPUTE-HEAVY narrow plans.
 
     The driver testdata ships each table as one parquet file with one row
     group, so the leaf scan is a single task and every narrow expression
     chain above it (MinHash md5 folds, normalization, per-row vector math)
-    runs on one core.  When the scan has fewer partitions than the session
-    parallelism, round-robin repartition once right after the read (guide
+    runs on one core; flooring right after the read fixes that (guide
     §2.5: "fix at the source; otherwise repartition immediately after the
     read").  Applied ONLY where downstream per-row compute dominates —
     a keyless repartition pays a local sort of its input plus a full-width
     shuffle, which measurably HURTS plain aggregation/join queries over
-    wider tables (a7: 0.65s -> 1.96s), so those keep the bare scan.  At
-    production scale the input has >= cores splits and the branch never
-    fires: no shuffle is added."""
-    n = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < n:
-        df = df.repartition(n)
-    return df
+    wider tables (a7: 0.65s -> 1.96s), so those keep the bare scan."""
+    from name_matching_spark.operators.dedup import _floor_parallelism
+
+    return _floor_parallelism(df)
 
 
 # ---------------------------------------------------------------------------
@@ -156,7 +153,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
     def p1_normalize_text(spark, sf):
-        d = _par(spark, _t(spark, sf, "documents"))
+        d = _par(_t(spark, sf, "documents"))
         return d.select(
             F.col("doc_id").alias("key"),
             normalize_text_col(F.col("text"), upper=True).alias("norm"),
@@ -168,7 +165,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
     def p3_numeric_extract(spark, sf):
-        e = _par(spark, _t(spark, sf, "events"))
+        e = _par(_t(spark, sf, "events"))
         cleaned = F.regexp_replace(F.col("props"), r"(?U)[^\w\s]", " ")
         toks = F.filter(F.split(cleaned, r"(?U)\s+"), lambda t: t != F.lit(""))
         nums = F.filter(toks, lambda t: t.rlike(r"^[0-9]+$"))
@@ -346,11 +343,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # arrays, filtered right after the Generate for the identical row
         # set at a fraction of the expression cost (guide §7.2).
         # The max_df denominator rides as a broadcast one-row aggregate
-        # instead of a separate driver-side count() action: the doc
-        # distinct's exchange is shared between the two references
-        # (ReusedExchange), so the whole query is ONE job instead of a
-        # count job + the aggregate job re-running the scan + distinct
-        # (guide §2.4; measured med 2.06 -> 1.91 s, rows identical).
+        # instead of a separate driver-side count() action, so the query
+        # is one action (guide §2.4; measured med 2.06 -> 1.91 s, rows
+        # identical).  The static plan holds the scan + doc distinct twice,
+        # once per reference; only at run time does AQE's stage reuse
+        # read the second exchange from the first one's shuffle output
+        # (ReusedExchange appears in the final adaptive plan, not in
+        # explain()'s initial plan).  Without AQE both would run.
         n_docs_df = F.broadcast(terms.agg(F.count("*").alias("_n")))
         return (
             terms.select("doc", F.explode_outer("terms").alias("term"))
@@ -381,7 +380,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
     def o1_token_sort(spark, sf):
-        return _par(spark, _t(spark, sf, "part")).select(
+        return _par(_t(spark, sf, "part")).select(
             F.col("p_partkey").alias("key"),
             F.array_join(F.array_sort(F.split("p_name", " ")), " ").alias("sorted_name"),
         )
@@ -404,7 +403,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return c.unionByName(s).groupBy("src").agg(F.count("*").alias("n"))
 
     def u2_token_intersect(spark, sf):
-        d = _par(spark, _t(spark, sf, "documents")).select(
+        d = _par(_t(spark, sf, "documents")).select(
             "doc_id", F.array_distinct(F.split("text", " ")).alias("toks")
         )
         a = d.alias("a")
@@ -420,7 +419,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
     def f1_jaccard(spark, sf):
-        d = _par(spark, _t(spark, sf, "documents")).select(
+        d = _par(_t(spark, sf, "documents")).select(
             "doc_id", F.split("text", " ").alias("toks")
         )
         a = d.alias("a")
@@ -541,12 +540,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def d2_minhash_lsh_pairs(spark, sf):
         return dd.minhash_lsh_pairs(
-            _par(spark, _t(spark, sf, "documents")), bands=4, rows_per_band=4
+            _par(_t(spark, sf, "documents")), bands=4, rows_per_band=4
         )
 
     def d2b_minhash_signature(spark, sf):
         sigs = dd.minhash_signatures(
-            _par(spark, _t(spark, sf, "documents")), num_hashes=4
+            _par(_t(spark, sf, "documents")), num_hashes=4
         )
         return sigs.select(
             "key", *[F.col("sig")[i].alias(f"h{i}") for i in range(4)]
@@ -556,14 +555,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # the composed flow: exact dedup -> LSH candidates over survivors
         # -> n-gram Jaccard verify -> drop list (fully oracle-checkable)
         # no _par here: every expensive dedup stage (signatures, grams)
-        # runs AFTER the exact-dedup window shuffle, so a scan repartition
+        # runs AFTER the exact-dedup aggregate, and dedup_pipeline floors
+        # its survivors and candidate pairs itself, so a scan repartition
         # adds an exchange without parallelizing anything (measured +1.5s)
         return dd.dedup_pipeline(
             _t(spark, sf, "documents"), bands=4, rows_per_band=4, min_jaccard=0.5
         )
 
     def d3_simhash(spark, sf):
-        return dd.simhash(_par(spark, _t(spark, sf, "documents")), bits=16)
+        return dd.simhash(_par(_t(spark, sf, "documents")), bits=16)
 
     def d3b_simhash_pairs(spark, sf):
         # 32-bit signature: 16 bits saturates past ~10^4 docs (only 65k
@@ -572,7 +572,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # docs).  At 32 bits the incidental rate is ~1.3e-6 and the output
         # tracks the true near-dup structure at every tested scale.
         return dd.simhash_pairs(
-            _par(spark, _t(spark, sf, "documents")), bits=32, bands=4, max_hamming=3
+            _par(_t(spark, sf, "documents")), bits=32, bands=4, max_hamming=3
         )
 
     def d4_ngram_jaccard(spark, sf):
@@ -585,7 +585,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return dd.ngram_jaccard_pairs(pairs, d, n=3)
 
     def d5_embedding_cosine(spark, sf):
-        e = _par(spark, _t(spark, sf, "embeddings"))
+        e = _par(_t(spark, sf, "embeddings"))
         pairs = e.select(F.col("vec_id").alias("key_x")).withColumn(
             "key_y", F.col("key_x") + 1
         ).join(e.select(F.col("vec_id").alias("key_y")), "key_y")
@@ -593,7 +593,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return out.select("key_x", "key_y", F.round("cosine", 4).alias("cosine"))
 
     def ann1_bruteforce_topk(spark, sf):
-        e = _par(spark, _t(spark, sf, "embeddings"))
+        e = _par(_t(spark, sf, "embeddings"))
         q = e.where(F.col("vec_id") < 3).select(
             F.col("vec_id").alias("query_id"), "embedding"
         )
@@ -603,7 +603,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
     def ann2_lsh_topk(spark, sf):
-        e = _par(spark, _t(spark, sf, "embeddings"))
+        e = _par(_t(spark, sf, "embeddings"))
         q = e.where(F.col("vec_id") < 3).select(
             F.col("vec_id").alias("query_id"), "embedding"
         )
@@ -644,7 +644,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def ann3_ivf_topk(spark, sf):
         from name_matching_spark.operators.similarity_search import ivf_topk
 
-        e = _par(spark, _t(spark, sf, "embeddings"))
+        e = _par(_t(spark, sf, "embeddings"))
         q = e.where(F.col("vec_id") < 3).select(
             F.col("vec_id").alias("query_id"), "embedding"
         )
@@ -686,18 +686,18 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
     def t1_token_count(spark, sf):
-        return ta.token_count(_par(spark, _t(spark, sf, "documents"))).select(
+        return ta.token_count(_par(_t(spark, sf, "documents"))).select(
             "key", "n_tokens", "n_chars"
         )
 
     def t2_quality_score(spark, sf):
-        return ta.quality_score(_par(spark, _t(spark, sf, "documents")))
+        return ta.quality_score(_par(_t(spark, sf, "documents")))
 
     def t3_lang_id(spark, sf):
-        return ta.lang_id(_par(spark, _t(spark, sf, "documents")))
+        return ta.lang_id(_par(_t(spark, sf, "documents")))
 
     def t4_fingerprint(spark, sf):
-        return ta.fingerprint(_par(spark, _t(spark, sf, "documents")))
+        return ta.fingerprint(_par(_t(spark, sf, "documents")))
 
     def mm1_multimodal_features(spark, sf):
         from name_matching_spark.operators.multimodal import (

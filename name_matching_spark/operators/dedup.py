@@ -35,24 +35,19 @@ def _md5_long(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
-def _md5_int28(col: Column) -> Column:
-    """Stable 28-bit integer from md5 (first 7 hex chars): small enough
-    that affine rehashing stays overflow-free in ANSI int64 arithmetic."""
-    return F.conv(F.substring(F.md5(col), 1, 7), 16, 10).cast("long")
-
-
 def _floor_parallelism(df: DataFrame, probe: DataFrame | None = None) -> DataFrame:
     """Round-robin repartition when the frame has fewer partitions than
-    the session's parallelism — the mid-pipeline analog of the scan floor
-    (guide §2.5).  AQE's byte-based coalescing shrinks a small shuffle to
-    1-2 partitions, which then serializes the CPU-heavy signature / gram
-    expressions above it on one core (measured: the d6 LSH stage from a
-    1-partition survivor checkpoint runs 3.0s vs 1.7s floored).  The
-    partition count is probed on ``probe`` (default ``df``), which MUST be
-    a materialized frame (checkpoint/scan): probing ``.rdd`` on an
-    un-executed AQE plan forces its shuffle stages to run at
-    plan-construction time.  At production volumes the coalesced
-    partition count far exceeds the core count and this is a no-op."""
+    the session's parallelism (guide §2.5).  Two sources of too few
+    partitions: a scan of one small file is one task, and AQE's
+    byte-based coalescing shrinks a small shuffle to 1-2 partitions.
+    Either serializes the CPU-heavy per-row expressions above it on one
+    core (measured: the d6 LSH stage from a 1-partition survivor
+    checkpoint runs 3.0s vs 1.7s floored).  The partition count is probed
+    on ``probe`` (default ``df``), which MUST be a materialized frame
+    (checkpoint/scan): probing ``.rdd`` on an un-executed AQE plan forces
+    its shuffle stages to run at plan-construction time.  At production
+    volumes the input has >= cores partitions and this is a no-op: no
+    shuffle is added."""
     n = df.sparkSession.sparkContext.defaultParallelism
     if (probe if probe is not None else df).rdd.getNumPartitions() < n:
         return df.repartition(n)
@@ -65,23 +60,6 @@ def exact_dedup(docs: DataFrame, text_col: str = "text", key_col: str = "doc_id"
         docs.groupBy(text_col)
         .agg(F.min(key_col).alias(key_col), F.count("*").alias("dup_count"))
         .select(key_col, text_col, "dup_count")
-    )
-
-
-def word_shingles(col: Column, n: int = 3) -> Column:
-    """array<string> of word n-gram shingles (distinct).  Splits on the
-    single-space delimiter (inputs are whitespace-normalized documents) so
-    the DuckDB oracle's ``string_split(text, ' ')`` is byte-equivalent."""
-    toks = F.split(col, " ")
-    k = F.size(toks)
-    return F.array_distinct(
-        F.when(
-            k >= n,
-            F.transform(
-                F.sequence(F.lit(0), k - n),
-                lambda i: F.array_join(F.slice(toks, i + 1, n), " "),
-            ),
-        ).otherwise(F.array(F.array_join(toks, " ")))
     )
 
 
@@ -99,12 +77,26 @@ def minhash_signatures(
 ) -> DataFrame:
     """(key, sig: array<long>) — MinHash signature per document.
 
-    Base hash = 28-bit md5 prefix of the shingle (oracle-reproducible);
-    family members are affine rehashes mod the Mersenne prime 2^31-1 —
-    28-bit base x tiny a_k keeps everything overflow-free under ANSI
-    int64 arithmetic in both engines."""
-    sh = word_shingles(F.col(text_col), shingle_n)
-    base = F.transform(sh, lambda s: _md5_int28(s))
+    Shingles: distinct word n-grams, split on the single-space delimiter
+    (inputs are whitespace-normalized documents) so the DuckDB oracle's
+    ``string_split(text, ' ')`` is byte-equivalent; a text of fewer than
+    ``shingle_n`` tokens is one shingle.  Base hash = 28-bit md5 prefix
+    of the shingle (oracle-reproducible); family members are affine
+    rehashes mod the Mersenne prime 2^31-1 — 28-bit base x tiny a_k keeps
+    everything overflow-free under ANSI int64 arithmetic in both engines.
+
+    Both projections are SQL strings, one ``F.expr`` each: the same
+    Catalyst expressions as Column trees built from Python lambdas, but
+    one JVM parse instead of ~200 py4j round trips per plan."""
+    toks = f"split(`{text_col}`, ' ')"
+    n = shingle_n
+    shingles = (
+        f"array_distinct(CASE WHEN size({toks}) >= {n} "
+        f"THEN transform(sequence(0, size({toks}) - {n}), "
+        f"i -> array_join(slice({toks}, i + 1, {n}), ' ')) "
+        f"ELSE array(array_join({toks}, ' ')) END)"
+    )
+    base = f"transform({shingles}, s -> CAST(conv(substring(md5(s), 1, 7), 16, 10) AS BIGINT))"
     # Two-step shape: the md5 base array is BOUND to a named column and the
     # K lanes are separate array_min(transform(...)) reads of it.  K lane
     # expressions over the raw `base` would re-inline (and re-md5) the
@@ -114,17 +106,12 @@ def minhash_signatures(
     # faster than the previous single aggregate fold, which allocated a
     # K-wide candidate array + zip_with accumulator per shingle
     # (interpreted higher-order funcs, no codegen).  Identical values.
-    d = docs.select(F.col(key_col).alias("key"), base.alias("_hs"))
-
-    def _lane(k: int):
-        a, b = _MH[k]
-        return F.array_min(
-            F.transform(F.col("_hs"), lambda v: (v * a + b) % _MERSENNE31)
-        )
-
-    return d.select(
-        "key", F.array(*[_lane(k) for k in range(num_hashes)]).alias("sig")
+    d = docs.select(F.col(key_col).alias("key"), F.expr(base).alias("_hs"))
+    lanes = ", ".join(
+        f"array_min(transform(_hs, v -> (v * {a} + {b}) % {_MERSENNE31}))"
+        for a, b in (_MH[k] for k in range(num_hashes))
     )
+    return d.select("key", F.expr(f"array({lanes})").alias("sig"))
 
 
 def _bucket_pairs(band_rows: DataFrame, max_bucket: int | None) -> DataFrame:
@@ -196,19 +183,13 @@ def minhash_lsh_pairs(
     # it in a single pass.  (A per-band union of selects over the
     # unmaterialized projection re-executes the md5 + K-hash aggregate once
     # per band — Catalyst does not CSE across union branches.)
-    bucket_arr = F.array(
-        *[
-            F.concat_ws(
-                "_",
-                F.lit(b),
-                *[
-                    F.col("sig")[b * rows_per_band + r].cast("string")
-                    for r in range(rows_per_band)
-                ],
-            )
-            for b in range(bands)
-        ]
+    bands_sql = ", ".join(
+        f"concat_ws('_', {b}, "
+        + ", ".join(f"CAST(sig[{b * rows_per_band + r}] AS STRING)" for r in range(rows_per_band))
+        + ")"
+        for b in range(bands)
     )
+    bucket_arr = F.expr(f"array({bands_sql})")
     # Materialize the banded table once: the self-join references it on
     # BOTH sides, and an unmaterialized projection would re-run the md5 +
     # K-hash signature aggregate per side.  (At scale this table is the
@@ -460,8 +441,17 @@ def dedup_pipeline(
         shingle_n=shingle_n,
         max_bucket=max_bucket,
     ).localCheckpoint()
+    # Floor the pairs too: AQE coalesces the small pair table to one
+    # partition, and the Jaccard above the (broadcast) gram joins then
+    # runs as one task (measured: 1.4-1.7 s on 27k pairs at local[4] on a
+    # 4-vCPU host, three cores idle).
     verified = ngram_jaccard_pairs(
-        cands, survivors, text_col, key_col, n=verify_ngram_n, min_jaccard=min_jaccard
+        _floor_parallelism(cands),
+        survivors,
+        text_col,
+        key_col,
+        n=verify_ngram_n,
+        min_jaccard=min_jaccard,
     )
     near_drops = (
         verified.select(F.col("key_y").alias("key"))

@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import hashlib
 import time
+import traceback
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -290,9 +291,11 @@ class EntityResolutionPipeline:
         from concurrent.futures import ThreadPoolExecutor
 
         _pool = ThreadPoolExecutor(max_workers=1)
+        background = []
         try:
             if self.overlap_tfidf:
                 tfidf_future = _pool.submit(self._tfidf_stage, names, in_fp)
+                background.append(tfidf_future)
             else:
                 tfidf_json, tfidf_meta = self._tfidf_stage(names, in_fp)
             pairs = self._stage(
@@ -316,17 +319,18 @@ class EntityResolutionPipeline:
 
             if self.overlap_tfidf:
                 # The metrics side-output is consumed by nothing downstream;
-                # queue it on the worker (after the fit — max_workers=1) so
-                # it overlaps the scorer stage instead of sitting between
-                # candidate_pairs and scored_pairs on the critical path.
-                # candidate_pairs has already populated the keys cache on
-                # this thread, so the worker only reads the materialized
-                # frame (no keys race).  The pool is NOT a context manager
-                # here: its shutdown join happens in the finally below, so
-                # the queued metrics job keeps running while the main
-                # thread proceeds into the scorer stage.
-                block_future = _pool.submit(_block_metrics_stage)
+                # run it on the worker once the fit has returned, so it
+                # overlaps the scorer stage instead of sitting between
+                # candidate_pairs and scored_pairs on the critical path (and
+                # a failed fit never starts it).  candidate_pairs has
+                # already populated the keys cache on this thread, so the
+                # worker only reads the materialized frame (no keys race).
+                # The pool is NOT a context manager here: its shutdown join
+                # happens in the finally below, so the metrics job keeps
+                # running while the main thread proceeds into the scorer.
                 tfidf_json, tfidf_meta = tfidf_future.result()
+                block_future = _pool.submit(_block_metrics_stage)
+                background.append(block_future)
             else:
                 _block_metrics_stage()
             # Repartition before the Arrow-UDF scorer: the checkpointed pair
@@ -531,6 +535,19 @@ class EntityResolutionPipeline:
                 "entities": entities,
                 "resolved_conversations": resolved,
             }
+        except BaseException as exc:
+            # Cancel queued work, wait for running work, and attach every
+            # background failure to the error being raised: a worker's
+            # exception is otherwise never read, and can be the root cause.
+            _pool.shutdown(wait=True, cancel_futures=True)
+            for fut in background:
+                err = None if fut.cancelled() else fut.exception()
+                if err is not None and err is not exc:
+                    exc.add_note(
+                        "background stage failed too:\n"
+                        + "".join(traceback.format_exception(err))
+                    )
+            raise
         finally:
             _pool.shutdown(wait=True)
 

@@ -129,6 +129,39 @@ def test_hot_block_pair_volume_stays_linear(spark):
     assert pairs.count() < 15_000
 
 
+def test_blocking_keys_match_union_distinct_reference(spark):
+    """The single-projection key table (per-name array_distinct, one
+    explode) holds exactly the (key, name) set of the per-family
+    explode + union + global distinct plan it replaced."""
+    from name_matching_spark.functions.phonetic import double_metaphone_udf
+    from name_matching_spark.operators.blocking import blocking_keys, lsh_band_keys
+
+    names = spark.createDataFrame(
+        [(n,) for n in [
+            "JOHN WICK", "JOHN WICK", "JONATHAN WICK", "J WICK", "HOTEL CONTINENTAL",
+            "CONTINENTAL HOTEL", "WINSTON SCOTT", "A B", "X", "SMITH SMYTHE SMITH",
+            "ACME LLC", "ACME INC LLC", "KATHERINE CATHERINE",
+        ]],
+        ["name"],
+    )
+    toks = names.select("name", F.explode(F.split("name", " ")).alias("t")).where(
+        F.length("t") >= 2
+    )
+    mp = toks.select("name", F.explode(double_metaphone_udf()(F.col("t"))).alias("m"))
+    ref = (
+        toks.select(F.concat(F.lit("tok:"), "t").alias("key"), "name")
+        .unionByName(toks.select(F.concat(F.lit("sx:"), F.soundex("t")).alias("key"), "name"))
+        .unionByName(
+            mp.where(F.length("m") > 0).select(F.concat(F.lit("mp:"), "m").alias("key"), "name")
+        )
+        .unionByName(names.select(F.explode(lsh_band_keys(F.col("name"))).alias("key"), "name"))
+        .distinct()
+    )
+    got = blocking_keys(names).collect()
+    assert len(got) == len(set(got))  # no duplicate (key, name) rows either
+    assert set(map(tuple, got)) == set(map(tuple, ref.collect()))
+
+
 def test_pipeline_blocking_keys_computed_once(spark, tmp_path, monkeypatch):
     """candidate_pairs and block_metrics consume the same blocking-key
     table; a fresh pipeline run must build it exactly once (the metaphone

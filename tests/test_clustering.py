@@ -523,3 +523,17 @@ def test_pipeline_auto_cap_resolves_and_fingerprints(spark, tmp_path):
     # ~100 names at 40 entities -> well under the 31k anchor -> floor cap 4
     assert params["refine_max_component"] == 4
     assert params["refine_cap_mode"] == "auto"
+
+
+def test_collect_bounded_maps_nan_to_none(spark):
+    """Arrow turns a NULL double into NaN; the driver collect must hand
+    back None for it (and for a real NaN), so `x is not None` checks
+    downstream keep their meaning."""
+    from name_matching_spark.operators.clustering import _collect_bounded
+
+    df = spark.createDataFrame(
+        [("a", 0.5), ("b", None), ("c", float("nan"))], "name string, p double"
+    )
+    got = sorted(_collect_bounded(df, 3))
+    assert got == [("a", 0.5), ("b", None), ("c", None)]
+    assert _collect_bounded(df, 2) is None

@@ -1,5 +1,7 @@
 """Dedup / similarity-search / text-analysis / multimodal operators."""
 
+import random
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -110,6 +112,95 @@ def test_ngram_jaccard_pairs(spark, docs):
     out = {(r["key_x"], r["key_y"]): r["jaccard"] for r in dd.ngram_jaccard_pairs(pairs, docs).collect()}
     assert out[(0, 1)] == 1.0
     assert out[(0, 2)] > out[(0, 3)]
+
+
+def _column_minhash_reference(docs, num_hashes=16, n=3):
+    """minhash_signatures spelled as Column trees from Python lambdas —
+    the reference the SQL-string build must match value for value."""
+    toks = F.split(F.col("text"), " ")
+    k = F.size(toks)
+    shingles = F.array_distinct(
+        F.when(
+            k >= n,
+            F.transform(
+                F.sequence(F.lit(0), k - n),
+                lambda i: F.array_join(F.slice(toks, i + 1, n), " "),
+            ),
+        ).otherwise(F.array(F.array_join(toks, " ")))
+    )
+    base = F.transform(
+        shingles, lambda s: F.conv(F.substring(F.md5(s), 1, 7), 16, 10).cast("long")
+    )
+    d = docs.select(F.col("doc_id").alias("key"), base.alias("_hs"))
+
+    def lane(a, b):
+        return F.array_min(F.transform(F.col("_hs"), lambda v: (v * a + b) % dd._MERSENNE31))
+
+    lanes = [lane(a, b) for a, b in dd._MH[:num_hashes]]
+    return d.select("key", F.array(*lanes).alias("sig"))
+
+
+def _seeded_corpus(spark, seed, n_docs, dup_every=0):
+    """Texts of 0-9 words from a small vocabulary (so short texts and
+    shared shingles occur); every ``dup_every``-th doc repeats an earlier
+    text verbatim or with one word swapped."""
+    rng = random.Random(seed)
+    vocab = "alpha beta gamma delta eps zeta eta theta iota kappa lam mu".split()
+    texts = []
+    for i in range(n_docs):
+        if dup_every and i and i % dup_every == 0:
+            words = texts[rng.randrange(i)].split(" ")
+            if rng.random() < 0.5 and len(words) > 3:
+                words[rng.randrange(len(words))] = rng.choice(vocab)
+            texts.append(" ".join(words))
+        else:
+            texts.append(" ".join(rng.choice(vocab) for _ in range(rng.randrange(10))))
+    return spark.createDataFrame(list(enumerate(texts)), ["doc_id", "text"])
+
+
+@pytest.mark.parametrize("num_hashes,n", [(16, 3), (4, 2)])
+def test_minhash_signatures_match_column_reference(spark, num_hashes, n):
+    docs = _seeded_corpus(spark, seed=5, n_docs=300)
+    assert docs.where(F.size(F.split("text", " ")) < n).count() > 0
+    got = dict(dd.minhash_signatures(docs, num_hashes=num_hashes, shingle_n=n).collect())
+    ref = dict(_column_minhash_reference(docs, num_hashes, n).collect())
+    assert len(got) == 300 and got == ref
+
+
+def test_dedup_pipeline_drop_list_matches_composition(spark):
+    """The composed drop list equals exact_dedup + minhash_lsh_pairs +
+    ngram_jaccard_pairs(>= 0.5) run one after the other."""
+    docs = _seeded_corpus(spark, seed=11, n_docs=400, dup_every=3)
+    got = {tuple(r) for r in dd.dedup_pipeline(docs).collect()}
+
+    survivors = dd.exact_dedup(docs).select("doc_id", "text").localCheckpoint()
+    kept = {r["doc_id"] for r in survivors.collect()}
+    exact = {(r["doc_id"], "exact_dup") for r in docs.collect() if r["doc_id"] not in kept}
+    verified = dd.ngram_jaccard_pairs(
+        dd.minhash_lsh_pairs(survivors), survivors, min_jaccard=0.5
+    )
+    near = {(r["key_y"], "near_dup") for r in verified.collect()}
+    assert exact and near
+    assert got == exact | near
+
+
+def test_dedup_pipeline_jaccard_runs_on_every_core(spark, monkeypatch):
+    """AQE coalesces the small candidate-pair checkpoint to one partition;
+    the pairs the Jaccard verification streams must still come in
+    >= defaultParallelism partitions (one task per core)."""
+    parts = []
+    real = dd.ngram_jaccard_pairs
+
+    def spy(pairs, *a, **kw):
+        parts.append(pairs.rdd.getNumPartitions())
+        return real(pairs, *a, **kw)
+
+    monkeypatch.setattr(dd, "ngram_jaccard_pairs", spy)
+    docs = _seeded_corpus(spark, seed=11, n_docs=400, dup_every=3)
+    dd.dedup_pipeline(docs).collect()
+    n = spark.sparkContext.defaultParallelism
+    assert n > 1 and len(parts) == 1
+    assert parts[0] >= n
 
 
 @pytest.fixture(scope="module")

@@ -97,6 +97,73 @@ def test_synthetic_fixture_cluster_agreement(spark, tmp_path):
     assert prec >= 0.99
 
 
+def _small_transcripts(spark, tmp_path, seed):
+    fixture = str(tmp_path / f"fx_{seed}")
+    write_fixture(fixture, n_entities=10, convs_per_entity=2, seed=seed)
+    return spark.read.parquet(os.path.join(fixture, "transcripts.parquet"))
+
+
+def _raise(msg):
+    def fail(*a, **kw):
+        raise RuntimeError(msg)
+
+    return fail
+
+
+def test_failed_tfidf_fit_never_starts_block_metrics(spark, tmp_path, monkeypatch):
+    import name_matching_spark.pipeline as pl
+    from name_matching_spark.functions.tfidf import TfidfModel
+
+    started = []
+    real = pl.block_stats
+    monkeypatch.setattr(pl, "block_stats", lambda *a, **kw: started.append(1) or real(*a, **kw))
+    monkeypatch.setattr(TfidfModel, "fit_spark", classmethod(_raise("fit failed")))
+    pipe = EntityResolutionPipeline(spark, str(tmp_path / "wh"))
+    with pytest.raises(RuntimeError, match="fit failed"):
+        pipe.run(_small_transcripts(spark, tmp_path, 31))
+    assert started == []
+
+
+def test_main_thread_failure_surfaces_tfidf_error(spark, tmp_path, monkeypatch):
+    """A fit that fails while blocking fails too must not vanish: its
+    error rides on the raised one."""
+    import name_matching_spark.pipeline as pl
+    from name_matching_spark.functions.tfidf import TfidfModel
+
+    monkeypatch.setattr(TfidfModel, "fit_spark", classmethod(_raise("fit failed")))
+    monkeypatch.setattr(pl, "candidate_pairs", _raise("blocking failed"))
+    pipe = EntityResolutionPipeline(spark, str(tmp_path / "wh"))
+    with pytest.raises(RuntimeError, match="blocking failed") as info:
+        pipe.run(_small_transcripts(spark, tmp_path, 32))
+    assert any("fit failed" in n for n in getattr(info.value, "__notes__", []))
+
+
+def test_scorer_failure_surfaces_block_metrics_error(spark, tmp_path, monkeypatch):
+    import name_matching_spark.pipeline as pl
+
+    monkeypatch.setattr(pl, "score_pairs", _raise("scorer failed"))
+    monkeypatch.setattr(pl, "block_stats", _raise("metrics failed"))
+    pipe = EntityResolutionPipeline(spark, str(tmp_path / "wh"))
+    with pytest.raises(RuntimeError, match="scorer failed") as info:
+        pipe.run(_small_transcripts(spark, tmp_path, 33))
+    assert any("metrics failed" in n for n in getattr(info.value, "__notes__", []))
+
+
+@pytest.mark.slow
+def test_overlap_tfidf_does_not_change_entities(spark, tmp_path):
+    transcripts = _small_transcripts(spark, tmp_path, 34)
+    ents = [
+        sorted(
+            (r["name"], r["entity_key"])
+            for r in EntityResolutionPipeline(spark, str(tmp_path / f"wh_{overlap}"), overlap_tfidf=overlap)
+            .run(transcripts)["entities"]
+            .collect()
+        )
+        for overlap in (True, False)
+    ]
+    assert ents[0] and ents[0] == ents[1]
+
+
 @pytest.mark.slow
 def test_checkpoint_resume(spark, tmp_path):
     fixture = str(tmp_path / "fx")
