@@ -63,6 +63,130 @@ class _Tree:
         return val[node]
 
 
+_LEAF_BITS = 64
+_ALL_LEAVES = np.uint64(2**64 - 1)
+# De Bruijn multiply-and-shift maps a 64-bit power of two to its exponent.
+_DEBRUIJN = np.uint64(0x03F79D71B4CB0A89)
+_DEBRUIJN_BIT = np.zeros(64, dtype=np.intp)
+_DEBRUIJN_BIT[(((_DEBRUIJN << np.arange(64, dtype=np.uint64)) >> np.uint64(58)))] = np.arange(64)
+
+
+class _BitvectorForest:
+    """QuickScorer-style forest evaluation (Lucchese et al., SIGIR 2015).
+
+    Leaves are numbered left to right; each tree keeps a 64-bit mask of
+    the leaves a row can still reach.  A split ``x[f] <= thr`` that a row
+    FAILS (x > thr, or x is NaN) clears the bits of its left subtree, and
+    the row's exit leaf is then the lowest bit left set.  The failed
+    splits of feature f are exactly the ones whose threshold is below
+    x[f]: a prefix of f's splits sorted by threshold, found by one binary
+    search.  The AND over that prefix is stored only at every STRIDE-th
+    split (per split it would cost 8 bytes x trees); the at most STRIDE-1
+    splits past the stored prefix come from a second table indexed by the
+    prefix length, whose row lists their trees and masks.
+
+    Margins add ``lr * value`` per tree in tree order onto ``base_score``,
+    the same float operations as the per-tree reference, so they are
+    bit-identical to it."""
+
+    STRIDE = 8
+    CHUNK = 256  # rows per pass: keeps the (rows x trees) masks in cache
+
+    def __init__(self, trees: list, learning_rate: float, base_score: float):
+        n = self.n_trees = len(trees)
+        S = self.STRIDE
+        self.base_score = base_score
+        self._values = np.zeros((n, _LEAF_BITS))
+        splits: dict = {}  # feature -> [(threshold, tree, mask)]
+        for t, tree in enumerate(trees):
+            self._walk(tree, t, 0, 0, learning_rate, self._values, splits)
+        self._features = []
+        for f, entries in sorted(splits.items()):
+            entries.sort(key=lambda e: e[0])
+            k = len(entries)
+            thr = np.array([e[0] for e in entries])
+            tree_of = np.array([e[1] for e in entries], dtype=np.intp)
+            mask = np.array([e[2] for e in entries], dtype=np.uint64)
+            # table[j] = AND of the masks of splits [0, j*S), per tree
+            table = np.full((k // S + 1, n), _ALL_LEAVES)
+            full = k - k % S  # the last, partial block is never a prefix
+            np.bitwise_and.at(
+                table[1:], (np.arange(full) // S, tree_of[:full]), mask[:full]
+            )
+            np.bitwise_and.accumulate(table, axis=0, out=table)
+            # row c: the splits [c - c % S, c) past the stored prefix as
+            # (tree, mask) slots; an unused slot ANDs all-ones into tree 0.
+            c = np.arange(k + 1)
+            start, rest = c - c % S, c % S
+            slot_tree = np.zeros((k + 1, S - 1), dtype=np.intp)
+            slot_mask = np.full((k + 1, S - 1), _ALL_LEAVES)
+            for i in range(S - 1):
+                on = rest > i
+                slot_tree[on, i] = tree_of[start[on] + i]
+                slot_mask[on, i] = mask[start[on] + i]
+            self._features.append((f, thr, table, slot_tree, slot_mask))
+
+    @staticmethod
+    def _walk(tree, t, node, leaf, lr, values, splits) -> int:
+        """Number the leaves under ``node`` left to right from ``leaf``,
+        record each split's mask; return the next free leaf number."""
+        f = tree.feature[node]
+        if f < 0:
+            if leaf == _LEAF_BITS:
+                raise ValueError(
+                    f"tree {t} has more than {_LEAF_BITS} leaves; "
+                    "the bitvector forest needs max_depth <= 6"
+                )
+            values[t, leaf] = lr * tree.value[node]
+            return leaf + 1
+        thr = tree.threshold[node]
+        if thr != thr:
+            raise ValueError(f"tree {t} has a NaN split threshold")
+        mid = _BitvectorForest._walk(tree, t, tree.left[node], leaf, lr, values, splits)
+        cleared = ((1 << (mid - leaf)) - 1) << leaf  # the left subtree's leaves
+        splits.setdefault(f, []).append((thr, t, (2**64 - 1) ^ cleared))
+        return _BitvectorForest._walk(tree, t, tree.right[node], mid, lr, values, splits)
+
+    @property
+    def nbytes(self) -> int:
+        return self._values.nbytes + sum(
+            a.nbytes for ft in self._features for a in ft[1:]
+        )
+
+    def margin(self, X: np.ndarray) -> np.ndarray:
+        n, S = self.n_trees, self.STRIDE
+        # failed[f][r] = how many of f's splits row r fails (NaN: all)
+        failed = [np.searchsorted(thr, X[:, f]) for f, thr, *_ in self._features]
+        out = np.empty(len(X))
+        m = max(min(self.CHUNK, len(X)), 1)
+        live = np.empty((m, n), dtype=np.uint64)
+        buf = np.empty_like(live)
+        rows = np.arange(m)[:, None]
+        for lo in range(0, len(X), m):
+            hi = min(lo + m, len(X))
+            lv, sc, r = live[: hi - lo], buf[: hi - lo], rows[: hi - lo]
+            lv.fill(_ALL_LEAVES)
+            for (_, _, table, slot_tree, slot_mask), c in zip(self._features, failed):
+                c = c[lo:hi]
+                # mode="clip": indices are in range; "raise" buffers `out`
+                np.take(table, c // S, axis=0, out=sc, mode="clip")
+                lv &= sc
+                # .at, not &=: one row may list a tree in two slots
+                np.bitwise_and.at(lv, (r, slot_tree[c]), slot_mask[c])
+            # lowest set bit -> leaf number (De Bruijn) -> lr * leaf value
+            np.negative(lv, out=sc)
+            sc &= lv
+            sc *= _DEBRUIJN
+            sc >>= np.uint64(58)
+            leaf = _DEBRUIJN_BIT[sc.T]
+            contrib = np.take_along_axis(self._values, leaf, axis=1)
+            # base + tree 0, then + tree 1, ...: the reference's order
+            contrib[0] += self.base_score
+            np.add.accumulate(contrib, axis=0, out=contrib)
+            out[lo:hi] = contrib[-1]
+        return out
+
+
 class GBMClassifier:
     def __init__(
         self,
@@ -81,6 +205,7 @@ class GBMClassifier:
         self.min_gain = min_gain
         self.base_score = 0.0
         self.trees: list[_Tree] = []
+        self._forest: _BitvectorForest | None = None  # built by predict_margin
         # Optional serving contract: the feature-column names (in order)
         # the model was fitted on.  Set by model.train.train() before
         # save; load_artifacts() enforces append-only evolution against
@@ -113,7 +238,7 @@ class GBMClassifier:
         # Pre-sort every feature once; nodes reuse the global order.
         order = np.argsort(X, axis=0, kind="stable")
         self.trees = []
-        self._packed_n = -1  # invalidate any packed forest from a prior fit
+        self._forest = None  # invalidate the forest of a prior fit
         for t in range(self.n_estimators):
             p = _sigmoid(margin)
             g = (p - y) * w
@@ -177,63 +302,24 @@ class GBMClassifier:
 
     # -- inference --------------------------------------------------------------
 
-    def _pack(self) -> None:
-        """Precompute, per tree, the root-to-leaf path decomposition:
-        every leaf becomes (value, [(feature, threshold, is_left), ...]).
-        Shallow trees (depth <= 4-ish) then evaluate as a handful of
-        full-column compares + boolean ANDs on contiguous arrays — which
-        beats pointer-chasing gathers on memory-bandwidth-starved hosts."""
-        packed = []
-        for tree in self.trees:
-            leaves: list = []
-            stack: list = [(0, [])]
-            while stack:
-                node, path = stack.pop()
-                f = tree.feature[node]
-                if f < 0:
-                    leaves.append((tree.value[node], path))
-                else:
-                    thr = tree.threshold[node]
-                    stack.append((tree.left[node], path + [(f, thr, True)]))
-                    stack.append((tree.right[node], path + [(f, thr, False)]))
-            # The comparison (feature, thr, side) triples reused across
-            # leaves of one tree are deduped: compute each cond once.
-            conds: dict = {}
-            for _, path in leaves:
-                for f, thr, _left in path:
-                    conds.setdefault((f, thr), len(conds))
-            packed.append((leaves, list(conds)))
-        self._leafpack = packed
-        self._packed_n = len(self.trees)
-
     def predict_margin(self, X: np.ndarray) -> np.ndarray:
         """Raw additive margin (pre-sigmoid log-odds).  The sigmoid
         SATURATES above ~0.99 probability — thousands of pairs collapse
         onto 0.9999+ — while the margin keeps ranking them; cluster
-        refinement uses it where probability carries no signal."""
+        refinement uses it where probability carries no signal.
+
+        Bit-identical to ``base_score + sum(lr * tree.predict(X))`` summed
+        in tree order; evaluated by a :class:`_BitvectorForest` built once
+        per fitted model."""
         X = np.ascontiguousarray(X, dtype=np.float64)
-        n = len(X)
         if not self.trees:
-            return np.full(n, self.base_score)
-        if getattr(self, "_packed_n", -1) != len(self.trees):
-            self._pack()
-        cols = [np.ascontiguousarray(X[:, j]) for j in range(X.shape[1])]
-        margin = np.full(n, self.base_score)
-        lr = self.learning_rate
-        for leaves, cond_keys in self._leafpack:
-            cond_cache = {k: cols[k[0]] <= k[1] for k in cond_keys}
-            for value, path in leaves:
-                mask = None
-                for f, thr, left in path:
-                    c = cond_cache[(f, thr)]
-                    term = c if left else ~c
-                    mask = term if mask is None else (mask & term)
-                contrib = lr * value
-                if mask is None:  # single-leaf tree
-                    margin += contrib
-                else:
-                    margin[mask] += contrib
-        return margin
+            return np.full(len(X), self.base_score)
+        forest = self._forest
+        if forest is None or forest.n_trees != len(self.trees):
+            forest = self._forest = _BitvectorForest(
+                self.trees, self.learning_rate, self.base_score
+            )
+        return forest.margin(X)
 
     def predict_proba(self, X: np.ndarray) -> np.ndarray:
         return _sigmoid(self.predict_margin(X))

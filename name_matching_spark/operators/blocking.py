@@ -27,7 +27,7 @@ Scale levers (explicit per the north rule):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 # Affine universal-hash family for MinHash (derived, fixed seed): values
@@ -187,17 +187,18 @@ def materialized_blocking_keys(
     :func:`block_stats` (the pipeline does) so the key computation runs
     exactly once per blocking pass.
 
-    ``with_sizes`` (default) folds the per-key ``block_size`` aggregate
-    and its join INTO the one materialization job, so the pair job and
-    the sub-block job both start from an already-sized, already
-    key-partitioned table instead of each re-paying the size shuffle.
+    ``with_sizes`` (default) folds the per-key ``block_size`` count INTO
+    the one materialization job, so the pair job and the sub-block job
+    both start from an already-sized, already key-partitioned table
+    instead of each re-paying the size shuffle.  The count is a window
+    over ``key``: a ``groupBy`` joined back would read the key projection
+    twice, running the metaphone UDF and MinHash twice.
     ``sub_rows`` threads the secondary sub-block signature into the key
     projection (see :func:`blocking_keys`); callers that pass the frame
     to :func:`candidate_pairs` must use the same ``sub_rows`` there."""
     k = blocking_keys(names, name_col=name_col, sub_rows=sub_rows, **kw)
     if with_sizes:
-        sizes = k.groupBy("key").agg(F.count("*").alias("block_size"))
-        k = k.join(sizes, "key")
+        k = k.withColumn("block_size", F.count("*").over(Window.partitionBy("key")))
     return k.localCheckpoint()
 
 

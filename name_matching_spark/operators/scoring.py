@@ -15,6 +15,7 @@ Decision semantics preserved from the reference: probability rounded to
 
 from __future__ import annotations
 
+import hashlib
 from collections.abc import Iterator
 
 import numpy as np
@@ -41,9 +42,9 @@ EVIDENCE_COLS = ("cosine_sim", "align_edit", "token_weakest_link")
 _ARTIFACT_CACHE: dict = {}
 
 
-def _artifacts(model_json: str, tfidf_json: str):
-    # Stable content-derived key (ids differ across task deserializations).
-    key = (len(model_json), model_json[:64], len(tfidf_json), tfidf_json[:64])
+def _artifacts(key: tuple[str, str], model_json: str, tfidf_json: str):
+    """Parsed (model, tfidf) for ``key``, the content digest of the two
+    JSON payloads (ids differ across task deserializations)."""
     hit = _ARTIFACT_CACHE.get(key)
     if hit is None:
         from name_matching_spark.functions.tfidf import TfidfModel
@@ -72,16 +73,19 @@ def make_scorer_udf(model_json: str, tfidf_json: str, spark=None, feature_cols=N
     schema = ", ".join(
         f"{c} double" for c in [*out_cols, "probability", "margin"]
     )
+    # Content digests, taken once here rather than per task.  Length plus
+    # prefix is no key: two TF-IDF fits differing in one name agree on both.
+    key = tuple(hashlib.sha256(j.encode()).hexdigest() for j in (model_json, tfidf_json))
     if spark is not None:
         bc = spark.sparkContext.broadcast((model_json, tfidf_json))
 
         def _get():
-            return _artifacts(*bc.value)
+            return _artifacts(key, *bc.value)
 
     else:
 
         def _get():
-            return _artifacts(model_json, tfidf_json)
+            return _artifacts(key, model_json, tfidf_json)
 
     def _score(
         it: Iterator[tuple[pd.Series, pd.Series]],

@@ -162,6 +162,32 @@ def test_blocking_keys_match_union_distinct_reference(spark):
     assert set(map(tuple, got)) == set(map(tuple, ref.collect()))
 
 
+def test_materialized_key_sizes_match_groupby_join(spark, labeled_sample):
+    """The window-counted ``block_size`` holds exactly the rows of the
+    groupBy + join-back sizing it replaced, which read the key projection
+    twice (hot keys, duplicate and NULL names included)."""
+    from name_matching_spark.operators.blocking import (
+        blocking_keys,
+        materialized_blocking_keys,
+    )
+
+    rows = [(n,) for n in labeled_sample.x.tolist()[:400]]
+    rows += [("JOHN WICK",)] * 3 + [("JOHN " + c,) for c in "ABCDEFGH"] + [(None,)]
+    names = spark.createDataFrame(rows, "name string")
+    keys = blocking_keys(names, sub_rows=4)
+    ref = keys.join(keys.groupBy("key").agg(F.count("*").alias("block_size")), "key")
+    got = materialized_blocking_keys(names, sub_rows=4)
+    assert got.columns == ref.columns
+
+    def rows(df):
+        return [(r.key, r.name, tuple(r._ss), r.block_size) for r in df.collect()]
+
+    got_rows = rows(got)
+    assert len(got_rows) == len(set(got_rows))
+    assert set(got_rows) == set(rows(ref))
+    assert max(r[3] for r in got_rows) >= 9  # the JOHN hot block
+
+
 def test_pipeline_blocking_keys_computed_once(spark, tmp_path, monkeypatch):
     """candidate_pairs and block_metrics consume the same blocking-key
     table; a fresh pipeline run must build it exactly once (the metaphone

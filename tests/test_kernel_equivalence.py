@@ -12,7 +12,7 @@ import numpy as np
 import pytest
 
 from name_matching_spark.functions import similarity as sim
-from name_matching_spark.model.gbm import GBMClassifier
+from name_matching_spark.model.gbm import GBMClassifier, _Tree
 
 EDGE = ["", "A", "B", "AB", "BA", "A B", "AA", " ", "ABCD", "DCBA",
         "JOHN WICK", "J WICK", "JONATHAN WICK", "WICK", "X Y Z", "ZYX"]
@@ -109,6 +109,99 @@ def test_gbm_packed_predict_matches_per_tree():
         margin += model.learning_rate * tree.predict(X)
     exp = 1.0 / (1.0 + np.exp(-margin))
     assert np.array_equal(packed, exp)
+
+
+def _per_tree_margin(model, X):
+    """The executable spec of predict_margin: each tree's own descent,
+    ``lr * leaf value`` added in tree order onto ``base_score``."""
+    margin = np.full(len(X), model.base_score)
+    for tree in model.trees:
+        margin += model.learning_rate * tree.predict(X)
+    return margin
+
+
+def _balanced_tree(depth, feature=0):
+    """A complete tree of ``depth`` splitting on ``feature``, 2**depth leaves."""
+    tree = _Tree()
+
+    def build(d, lo, hi):
+        node = tree._new_node()
+        if d == depth:
+            tree.value[node] = lo
+            return node
+        mid = 0.5 * (lo + hi)
+        tree.feature[node] = feature
+        tree.threshold[node] = mid
+        tree.left[node] = build(d + 1, lo, mid)
+        tree.right[node] = build(d + 1, mid, hi)
+        return node
+
+    build(0, 0.0, 1.0)
+    return tree
+
+
+@pytest.fixture(scope="module")
+def shipped_forest(artifacts):
+    """The shipped model and real feature rows, with NaN and +-inf planted
+    in every feature column."""
+    from name_matching_spark.functions.features import build_features
+
+    model, tfidf = artifacts
+    X = build_features(XS, YS, tfidf)
+    rng = np.random.default_rng(5)
+    for j in range(X.shape[1]):
+        for v in (np.nan, np.inf, -np.inf):
+            X[rng.choice(len(X), size=25, replace=False), j] = v
+    X[:3] = np.array([[np.nan], [np.inf], [-np.inf]])  # non-finite in every feature
+    return GBMClassifier.from_json(model.to_json()), X
+
+
+def test_bitvector_forest_matches_per_tree_on_shipped_model(shipped_forest):
+    model, X = shipped_forest
+    assert len(model.trees) == 400
+    assert np.array_equal(model.predict_margin(X), _per_tree_margin(model, X))
+
+
+@pytest.mark.parametrize("n", [0, 1])
+def test_bitvector_forest_tiny_batches(shipped_forest, n):
+    model, X = shipped_forest
+    for lo in (0, 1, 2, 500):  # NaN row, +inf row, -inf row, a real row
+        got = model.predict_margin(X[lo : lo + n])
+        assert got.shape == (n,)
+        assert np.array_equal(got, _per_tree_margin(model, X[lo : lo + n]))
+
+
+def test_bitvector_forest_single_leaf_tree(shipped_forest):
+    model, X = shipped_forest
+    stump = _Tree()
+    stump.value[stump._new_node()] = 0.37
+    model = GBMClassifier.from_json(model.to_json())
+    model.trees.insert(3, stump)
+    assert np.array_equal(model.predict_margin(X), _per_tree_margin(model, X))
+    only = GBMClassifier(learning_rate=0.5)
+    only.trees = [stump]
+    assert np.array_equal(only.predict_margin(X), _per_tree_margin(only, X))
+
+
+def test_bitvector_forest_deepest_allowed_tree():
+    model = GBMClassifier(learning_rate=0.1)
+    model.trees = [_balanced_tree(6), _balanced_tree(2, feature=1)]
+    X = np.random.default_rng(3).random((300, 2))
+    X[::7, 0] = np.linspace(0, 1, 65)[: len(X[::7])]  # values on thresholds
+    assert np.array_equal(model.predict_margin(X), _per_tree_margin(model, X))
+
+
+def test_bitvector_forest_rejects_more_than_64_leaves():
+    model = GBMClassifier()
+    model.trees = [_balanced_tree(7)]
+    with pytest.raises(ValueError, match="more than 64 leaves"):
+        model.predict_margin(np.zeros((1, 1)))
+
+
+def test_bitvector_forest_size_bound(shipped_forest):
+    model, X = shipped_forest
+    model.predict_margin(X[:1])
+    assert model._forest.nbytes <= 8 * 2**20
 
 
 def test_gbm_roundtrip_predict_identical():

@@ -386,6 +386,32 @@ def test_embedding_channel_scorer_or_rule(spark):
     assert all(r["prediction"] == 0 for r in plain.collect())
 
 
+def test_scorer_artifact_cache_keys_on_content(spark):
+    """A reused Python worker keeps parsed artifacts across tasks.  Two
+    TF-IDF fits differing in one name (equal JSON length and prefix) must
+    each be scored with their own vocabulary, not the one cached first."""
+    import numpy as np
+    import pandas as pd
+
+    from name_matching_spark.functions.features import FEATURE_COLS, build_features
+    from name_matching_spark.functions.tfidf import TfidfModel
+    from name_matching_spark.model.train import load_train_corpus
+    from name_matching_spark.operators.scoring import make_scorer_udf
+
+    model, _ = load_artifacts()
+    corpus = load_train_corpus()[:500]
+    fits = [TfidfModel.fit(corpus + [n]).to_json() for n in ("ZORAN KOVAC", "ZORAN KOVIC")]
+    assert fits[0] != fits[1]
+    assert (len(fits[0]), fits[0][:64]) == (len(fits[1]), fits[1][:64])
+    xs, ys = ["ZORAN KOVAC", "ZORAN KOVIC"], ["ZORAN", "ZORAN"]
+    expected = [build_features(xs, ys, TfidfModel.from_json(j)) for j in fits]
+    assert not np.array_equal(*expected)
+    for tfidf_json, exp in zip(fits, expected):  # in this process, in order
+        scorer = make_scorer_udf(model.to_json(), tfidf_json)
+        got = next(scorer.func(iter([(pd.Series(xs), pd.Series(ys))])))
+        assert np.array_equal(got[FEATURE_COLS].to_numpy(), exp)
+
+
 @pytest.mark.slow
 def test_embedding_channel_end_to_end(spark, tmp_path):
     """Pipeline accepts an optional (name, embedding) table: semantic LSH
