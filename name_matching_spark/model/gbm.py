@@ -64,6 +64,7 @@ class _Tree:
 
 
 _LEAF_BITS = 64
+_MAX_DEPTH = 6  # 2**6 leaves fill the 64-bit leaf mask
 _ALL_LEAVES = np.uint64(2**64 - 1)
 # De Bruijn multiply-and-shift maps a 64-bit power of two to its exponent.
 _DEBRUIJN = np.uint64(0x03F79D71B4CB0A89)
@@ -135,7 +136,7 @@ class _BitvectorForest:
             if leaf == _LEAF_BITS:
                 raise ValueError(
                     f"tree {t} has more than {_LEAF_BITS} leaves; "
-                    "the bitvector forest needs max_depth <= 6"
+                    f"the bitvector forest needs max_depth <= {_MAX_DEPTH}"
                 )
             values[t, leaf] = lr * tree.value[node]
             return leaf + 1
@@ -197,6 +198,11 @@ class GBMClassifier:
         reg_lambda: float = 1.0,
         min_gain: float = 1e-6,
     ):
+        if max_depth > _MAX_DEPTH:  # fail before training, not at predict
+            raise ValueError(
+                f"max_depth={max_depth}: the bitvector forest needs "
+                f"max_depth <= {_MAX_DEPTH} (at most {_LEAF_BITS} leaves per tree)"
+            )
         self.n_estimators = n_estimators
         self.learning_rate = learning_rate
         self.max_depth = max_depth

@@ -99,6 +99,13 @@ DEFAULT_TUNE_GRID = [
 ]
 
 
+def _check_configs(configs: list[dict]) -> None:
+    """Raise on a config GBMClassifier rejects (e.g. max_depth > 6) before
+    any model is fitted, not after the fits of the configs before it."""
+    for cfg in configs:
+        GBMClassifier(**cfg)
+
+
 def tune_grid_search(
     X: np.ndarray,
     y: np.ndarray,
@@ -111,6 +118,7 @@ def tune_grid_search(
     """Fit every grid config on the deterministic train split, score on the
     holdout; returns {"best": cfg, "results": [per-config metrics]}."""
     grid = grid or DEFAULT_TUNE_GRID
+    _check_configs(grid)
     rng = np.random.default_rng(seed)
     perm = rng.permutation(len(y))
     n_test = int(len(y) * test_frac)
@@ -153,6 +161,7 @@ def tune_cv_ap(
     holdout F1@threshold, OUR authoritative gate) so both objectives are
     measured; ``train(tune_objective="cv_ap")`` ships the CV-AP winner."""
     grid = grid or DEFAULT_TUNE_GRID
+    _check_configs(grid)
     rng = np.random.default_rng(seed)
     perm = rng.permutation(len(y))
     results = []
@@ -240,6 +249,7 @@ def train(
     "J. Smith" 0.96 → 0.75 at equal weight); 0.5 keeps the reference
     contract while still teaching the model that a positive stays
     positive when its idf evidence deflates at corpus scale."""
+    _check_configs([{"max_depth": max_depth}] if tune_grid is None else tune_grid)
     t0 = time.time()
     df = load_labeled_pairs(pos_csv, neg_csv)
     df["source"] = "reference"

@@ -38,21 +38,28 @@ _SCORE_SCHEMA = ", ".join(
 # score_pairs(keep_features=False).
 EVIDENCE_COLS = ("cosine_sim", "align_edit", "token_weakest_link")
 
-# Executor-side artifact cache: parse JSON once per python worker.
-_ARTIFACT_CACHE: dict = {}
+# Executor-side artifact caches: parse each JSON once per python worker,
+# keyed on its content digest.  The model and the TF-IDF fit are cached
+# apart, so a worker that scores many corpora builds one GBM forest.
+_MODEL_CACHE: dict = {}
+_TFIDF_CACHE: dict = {}
 
 
 def _artifacts(key: tuple[str, str], model_json: str, tfidf_json: str):
-    """Parsed (model, tfidf) for ``key``, the content digest of the two
+    """Parsed (model, tfidf) for ``key``, the content digests of the two
     JSON payloads (ids differ across task deserializations)."""
-    hit = _ARTIFACT_CACHE.get(key)
-    if hit is None:
-        from name_matching_spark.functions.tfidf import TfidfModel
+    model_key, tfidf_key = key
+    model = _MODEL_CACHE.get(model_key)
+    if model is None:
         from name_matching_spark.model.gbm import GBMClassifier
 
-        hit = (GBMClassifier.from_json(model_json), TfidfModel.from_json(tfidf_json))
-        _ARTIFACT_CACHE[key] = hit
-    return hit
+        model = _MODEL_CACHE[model_key] = GBMClassifier.from_json(model_json)
+    tfidf = _TFIDF_CACHE.get(tfidf_key)
+    if tfidf is None:
+        from name_matching_spark.functions.tfidf import TfidfModel
+
+        tfidf = _TFIDF_CACHE[tfidf_key] = TfidfModel.from_json(tfidf_json)
+    return model, tfidf
 
 
 def make_scorer_udf(model_json: str, tfidf_json: str, spark=None, feature_cols=None):

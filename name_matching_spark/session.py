@@ -11,10 +11,14 @@ It runs the stock daemon after one patch: on CPython < 3.12, the
 Python-UDF task no longer re-reads the directory of ``pyspark.zip`` and of
 the spark-core jar once per imported pyspark sub-package (110-390 ms per
 task on a 4-vCPU host); an archive is re-read only when its mtime or size
-changed.  A session not built here pays that cost on every task.  The
-daemon is launched as ``python -m``, so the directory holding this package
-goes on the workers' ``PYTHONPATH`` (``spark.executorEnv.PYTHONPATH``): the
-daemon then starts from any working directory.
+changed.  A session not built here pays that cost on every task.
+
+Only a ``local`` / ``local[N]`` master gets this daemon: its workers share
+the driver's filesystem and interpreter, so they import this package the
+way the UDFs do.  On a cluster the package reaches executors through
+``--py-files``, which pyspark puts on ``sys.path`` only after the daemon
+has forked a worker, so the daemon could not be imported there; other
+masters keep the stock ``pyspark.daemon``.
 """
 
 from __future__ import annotations
@@ -23,7 +27,13 @@ import os
 
 from pyspark.sql import SparkSession
 
-_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+def _worker_conf(master: str) -> dict:
+    """Python-worker settings for ``master``: the patched daemon on a local
+    master only (see the module docstring)."""
+    if master == "local" or master.startswith("local["):
+        return {"spark.python.daemon.module": "name_matching_spark.pyworker_daemon"}
+    return {}
 
 
 def _tune_malloc_env() -> None:
@@ -75,9 +85,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
-        .config("spark.python.daemon.module", "name_matching_spark.pyworker_daemon")
-        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**_worker_conf(master), **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

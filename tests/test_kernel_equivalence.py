@@ -198,6 +198,26 @@ def test_bitvector_forest_rejects_more_than_64_leaves():
         model.predict_margin(np.zeros((1, 1)))
 
 
+def test_gbm_rejects_max_depth_above_6_before_training():
+    GBMClassifier(max_depth=6)
+    with pytest.raises(ValueError, match="max_depth <= 6"):
+        GBMClassifier(max_depth=7)
+
+
+def test_tune_grid_rejects_deep_config_before_any_fit(monkeypatch):
+    from name_matching_spark.model import train
+
+    def no_fit(*a, **k):
+        raise AssertionError("fit ran before the grid was checked")
+
+    monkeypatch.setattr(GBMClassifier, "fit", no_fit)
+    grid = [{"n_estimators": 5, "max_depth": 2}, {"n_estimators": 5, "max_depth": 7}]
+    X, y = np.zeros((10, 2)), np.arange(10) % 2
+    for tune in (train.tune_grid_search, train.tune_cv_ap):
+        with pytest.raises(ValueError, match="max_depth <= 6"):
+            tune(X, y, grid=grid)
+
+
 def test_bitvector_forest_size_bound(shipped_forest):
     model, X = shipped_forest
     model.predict_margin(X[:1])

@@ -412,6 +412,36 @@ def test_scorer_artifact_cache_keys_on_content(spark):
         assert np.array_equal(got[FEATURE_COLS].to_numpy(), exp)
 
 
+
+def test_scorer_parses_model_once_across_tfidf_fits(spark, monkeypatch):
+    """The worker-side cache keys the model and the TF-IDF fit apart: a new
+    corpus parses its TF-IDF fit but reuses the parsed model (and forest)."""
+    import pandas as pd
+
+    from name_matching_spark.functions.tfidf import TfidfModel
+    from name_matching_spark.model.gbm import GBMClassifier
+    from name_matching_spark.operators import scoring
+    from name_matching_spark.operators.scoring import make_scorer_udf
+
+    monkeypatch.setattr(scoring, "_MODEL_CACHE", {})
+    monkeypatch.setattr(scoring, "_TFIDF_CACHE", {})
+    parses = []
+    real = GBMClassifier.from_json.__func__
+    monkeypatch.setattr(
+        GBMClassifier,
+        "from_json",
+        classmethod(lambda cls, j: parses.append(j) or real(cls, j)),
+    )
+    model_json = load_artifacts()[0].to_json()
+    xs, ys = pd.Series(["ANA LEE"]), pd.Series(["ANA LI"])
+    a, b = ["ANA LEE", "BOB"], ["ANA LEE", "BOB", "CARL"]
+    for corpus in (a, b, a):
+        scorer = make_scorer_udf(model_json, TfidfModel.fit(corpus).to_json())
+        next(scorer.func(iter([(xs, ys)])))
+    assert len(parses) == 1
+    assert len(scoring._MODEL_CACHE) == 1 and len(scoring._TFIDF_CACHE) == 2
+
+
 @pytest.mark.slow
 def test_embedding_channel_end_to_end(spark, tmp_path):
     """Pipeline accepts an optional (name, embedding) table: semantic LSH

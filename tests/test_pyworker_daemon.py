@@ -10,7 +10,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from name_matching_spark import pyworker_daemon
+from name_matching_spark import pyworker_daemon, session
 
 needs_patch = pytest.mark.skipif(
     sys.version_info >= (3, 12), reason="CPython >= 3.12 does not re-read zips"
@@ -99,3 +99,52 @@ def test_rewritten_zip_on_sys_path_is_reread(tmp_path, monkeypatch):
     _write_zip(archive, {"nms_zip_a": "X = 1\n", "nms_zip_b": "Y = 2\n"})
     assert _zip_reads(importlib.invalidate_caches).count(archive) == 1
     assert importlib.import_module("nms_zip_b").Y == 2
+
+
+class _RecordingBuilder:
+    """Stands in for SparkSession.builder: records the conf, starts no JVM."""
+
+    def __init__(self):
+        self.conf = {}
+
+    def appName(self, name):
+        return self
+
+    def master(self, master):
+        self.conf["master"] = master
+        return self
+
+    def config(self, key, value):
+        self.conf[key] = value
+        return self
+
+    def getOrCreate(self):
+        return self.conf
+
+
+@pytest.mark.parametrize(
+    "master, patched",
+    [
+        ("local", True),
+        ("local[8]", True),
+        ("local[*]", True),
+        ("spark://h:7077", False),
+        ("yarn", False),
+        ("local-cluster[2,1,1024]", False),
+    ],
+)
+def test_get_spark_sets_daemon_only_on_local_master(monkeypatch, master, patched):
+    """Off a local master the package reaches executors as --py-files, which
+    the daemon cannot import before it forks: keep the stock daemon there."""
+
+    class FakeSession:
+        builder = _RecordingBuilder()
+
+    monkeypatch.setattr(session, "SparkSession", FakeSession)
+    conf = session.get_spark(master=master)
+    assert conf["master"] == master
+    assert "spark.executorEnv.PYTHONPATH" not in conf
+    if patched:
+        assert conf["spark.python.daemon.module"] == "name_matching_spark.pyworker_daemon"
+    else:
+        assert "spark.python.daemon.module" not in conf
