@@ -151,6 +151,13 @@ class CheckpointManager:
                 return self.read(name)
         t0 = time.time()
         out = fn()
+        # The manifest is the commit marker: drop the old one before the
+        # table is overwritten, so a crash mid-stage leaves no manifest
+        # beside rows produced under other params.
+        try:
+            os.remove(self.manifest_path(name))
+        except FileNotFoundError:
+            pass
         self._write(out, name)
         stored = self.read(name)
         part_counts = self._partition_lineage(stored, name)
@@ -166,8 +173,10 @@ class CheckpointManager:
             "duration_sec": round(time.time() - t0, 3),
             "completed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         }
-        with open(self.manifest_path(name), "w") as f:
+        path = self.manifest_path(name)
+        with open(path + ".tmp", "w") as f:
             json.dump(manifest, f)
+        os.replace(path + ".tmp", path)
         self._append_metric(name, rows, manifest["duration_sec"])
         return stored
 

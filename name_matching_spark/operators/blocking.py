@@ -174,7 +174,6 @@ def materialized_blocking_keys(
     names: DataFrame,
     name_col: str = "name",
     sub_rows: int = 4,
-    with_sizes: bool = True,
     **kw,
 ) -> DataFrame:
     """:func:`blocking_keys`, eagerly materialized (``localCheckpoint``).
@@ -187,18 +186,17 @@ def materialized_blocking_keys(
     :func:`block_stats` (the pipeline does) so the key computation runs
     exactly once per blocking pass.
 
-    ``with_sizes`` (default) folds the per-key ``block_size`` count INTO
-    the one materialization job, so the pair job and the sub-block job
-    both start from an already-sized, already key-partitioned table
-    instead of each re-paying the size shuffle.  The count is a window
-    over ``key``: a ``groupBy`` joined back would read the key projection
-    twice, running the metaphone UDF and MinHash twice.
-    ``sub_rows`` threads the secondary sub-block signature into the key
-    projection (see :func:`blocking_keys`); callers that pass the frame
-    to :func:`candidate_pairs` must use the same ``sub_rows`` there."""
+    The per-key ``block_size`` count is folded INTO the one
+    materialization job, so the pair job and the sub-block job both start
+    from an already-sized, already key-partitioned table instead of each
+    re-paying the size shuffle.  The count is a window over ``key``: a
+    ``groupBy`` joined back would read the key projection twice, running
+    the metaphone UDF and MinHash twice.  ``sub_rows`` threads the
+    secondary sub-block signature ``_ss`` into the key projection (see
+    :func:`blocking_keys`); :func:`candidate_pairs` needs ``sub_rows >= 1``
+    and takes the sub-block row count from ``_ss`` itself."""
     k = blocking_keys(names, name_col=name_col, sub_rows=sub_rows, **kw)
-    if with_sizes:
-        k = k.withColumn("block_size", F.count("*").over(Window.partitionBy("key")))
+    k = k.withColumn("block_size", F.count("*").over(Window.partitionBy("key")))
     return k.localCheckpoint()
 
 
@@ -211,25 +209,24 @@ def candidate_pairs(
     rows_per_band: int = 1,
     use_metaphone: bool = True,
     keys: DataFrame | None = None,
-    sub_block: bool = True,
     sub_rows: int = 4,
 ) -> DataFrame:
     """Distinct candidate pairs (name_x < name_y) from the blocked self-join.
 
     Blocks within ``[2, max_block]`` pair quadratically (bounded at
     max_block^2/2 per block).  HOT blocks (> max_block) are NOT dropped:
-    with ``sub_block=True`` (default) their members are re-keyed by
-    ``sub_rows`` secondary MinHash rows — similarity-preserving sub-blocks
-    whose members pair under the same cap — and sub-blocks still over the
-    cap emit linear star pairs around the min-name hub.  Every block's
-    pair contribution is therefore O(members * max_block) worst case, and
-    no key family ever silently contributes zero candidates.
-    ``sub_block=False`` restores the old purge (drop oversized) semantics.
+    their members are re-keyed by ``sub_rows`` secondary MinHash rows —
+    similarity-preserving sub-blocks whose members pair under the same
+    cap — and sub-blocks still over the cap emit linear star pairs around
+    the min-name hub.  Every block's pair contribution is therefore
+    O(members * max_block) worst case, and no key family ever silently
+    contributes zero candidates.
 
-    The key->size join and the self-join share the ``key`` partitioning, so
-    Catalyst reuses the exchange; AQE handles residual skew at runtime.
     ``keys``: a pre-materialized :func:`materialized_blocking_keys` frame
-    to reuse (must have been built with the same blocking parameters).
+    to reuse (must have been built with the same blocking parameters).  It
+    must carry ``block_size`` and the sub-block signature ``_ss``
+    (``sub_rows >= 1``), else ``ValueError``; the sub-block rows are the
+    entries of ``_ss``, whatever ``sub_rows`` says here.
     """
     if keys is None:
         keys = materialized_blocking_keys(
@@ -239,74 +236,56 @@ def candidate_pairs(
             bands=bands,
             rows_per_band=rows_per_band,
             use_metaphone=use_metaphone,
-            sub_rows=sub_rows if sub_block else 0,
+            sub_rows=sub_rows,
         )
-    if "block_size" in keys.columns:
-        keyed = keys  # sizes folded into the materialization job
-    else:
-        sizes = keys.groupBy("key").agg(F.count("*").alias("block_size"))
-        keyed = keys.join(sizes, "key")
-    ok = keyed.where(
+    missing = {"block_size", "_ss"} - set(keys.columns)
+    if missing:
+        raise ValueError(
+            f"keys frame lacks {sorted(missing)}: build it with "
+            "materialized_blocking_keys(..., sub_rows >= 1)"
+        )
+    ok = keys.where(
         (F.col("block_size") >= 2) & (F.col("block_size") <= max_block)
     ).select("key", "name")
-    pairs = _join_pairs(ok)
-    if sub_block:
-        # Secondary MinHash rows (a hash family DISJOINT from the LSH
-        # bands): a true alias pair with shingle-Jaccard J lands in the
-        # same sub-block on any given row with probability J, so with r
-        # rows the pair survives with 1-(1-J)^r — recall degrades
-        # gracefully instead of zeroing out when a whole key family goes
-        # hot (measured 0.502 truth-pair recall at 100k entities under
-        # the old purge).  The signature normally rides along in the keys
-        # frame (``_ss``, computed in the same projection as the keys —
-        # one pass over the shingles); a keys frame built without it
-        # falls back to the old distinct + MinHash + join pass.
-        hot = keyed.where(F.col("block_size") > max_block)
-        if "_ss" not in keys.columns:
-            sec = (
-                hot.select("name")
-                .distinct()
-                .withColumn(
-                    "_ss",
-                    minhash_signature(
-                        F.col("name"), num_hashes=sub_rows, offset=101
-                    ),
-                )
-            )
-            hot = hot.select("key", "name").join(sec, "name")
-        sub_key = F.array(
-            *[
-                F.concat_ws(
-                    "|", F.col("key"), F.lit(str(i)), F.col("_ss")[i].cast("string")
-                )
-                for i in range(sub_rows)
-            ]
+    # Secondary MinHash rows (a hash family DISJOINT from the LSH bands):
+    # a true alias pair with shingle-Jaccard J lands in the same sub-block
+    # on any given row with probability J, so with r rows the pair
+    # survives with 1-(1-J)^r — recall degrades gracefully instead of
+    # zeroing out when a whole key family goes hot (measured 0.502
+    # truth-pair recall at 100k entities when hot blocks were dropped).
+    # Sub-key ``key|i|_ss[i]`` for every row i of the signature.
+    # Materialize the sub-keyed table: it feeds the size aggregate, both
+    # self-join sides and the star fallback — without this the hot filter
+    # + explode re-execute per reference.
+    sub = (
+        keys.where(F.col("block_size") > max_block)
+        .select("key", "name", F.posexplode("_ss").alias("_i", "_h"))
+        .select(
+            F.concat_ws(
+                "|", "key", F.col("_i").cast("string"), F.col("_h").cast("string")
+            ).alias("key"),
+            "name",
         )
-        # Materialize the sub-keyed table: it feeds the size aggregate,
-        # both self-join sides and the star fallback — without this the
-        # hot filter + explode re-execute per reference.
-        sub = (
-            hot.select(F.explode(sub_key).alias("key"), "name")
-            .localCheckpoint()
-        )
-        ssizes = sub.groupBy("key").agg(F.count("*").alias("block_size"))
-        skeyed = sub.join(ssizes, "key")
-        sok = skeyed.where(
-            (F.col("block_size") >= 2) & (F.col("block_size") <= max_block)
-        ).select("key", "name")
-        # Sub-blocks STILL over the cap (low-entropy shingle mass — e.g.
-        # thousands of names sharing one dominant shingle) fall back to
-        # linear STAR pairs around the min-name hub, the same discipline as
-        # the LSH mega-bucket cap in dedup.py: O(size) pairs, hub-mediated
-        # transitive recall, never a quadratic and never zero work.
-        shot = skeyed.where(F.col("block_size") > max_block).select("key", "name")
-        hubs = shot.groupBy("key").agg(F.min("name").alias("hub"))
-        star = (
-            shot.join(hubs, "key")
-            .where(F.col("name") != F.col("hub"))
-            .select(F.col("hub").alias("name_x"), F.col("name").alias("name_y"))
-        )
-        pairs = pairs.unionByName(_join_pairs(sok)).unionByName(star)
+        .localCheckpoint()
+    )
+    ssizes = sub.groupBy("key").agg(F.count("*").alias("block_size"))
+    skeyed = sub.join(ssizes, "key")
+    sok = skeyed.where(
+        (F.col("block_size") >= 2) & (F.col("block_size") <= max_block)
+    ).select("key", "name")
+    # Sub-blocks STILL over the cap (low-entropy shingle mass — e.g.
+    # thousands of names sharing one dominant shingle) fall back to
+    # linear STAR pairs around the min-name hub, the same discipline as
+    # the LSH mega-bucket cap in dedup.py: O(size) pairs, hub-mediated
+    # transitive recall, never a quadratic and never zero work.
+    shot = skeyed.where(F.col("block_size") > max_block).select("key", "name")
+    hubs = shot.groupBy("key").agg(F.min("name").alias("hub"))
+    star = (
+        shot.join(hubs, "key")
+        .where(F.col("name") != F.col("hub"))
+        .select(F.col("hub").alias("name_x"), F.col("name").alias("name_y"))
+    )
+    pairs = _join_pairs(ok).unionByName(_join_pairs(sok)).unionByName(star)
     return pairs.dropDuplicates(["name_x", "name_y"])
 
 

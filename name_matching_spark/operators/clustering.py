@@ -28,6 +28,8 @@ O(log n)-round algorithm — expressed in DataFrame ops.  Design notes:
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -260,24 +262,50 @@ def _logit(t: float) -> float:
 # ranks them (margin >= logit(t) == raw prob >= t, exactly).
 MARGIN_RUNG_MIN_PROB = 0.999
 
+# Evidence-rung thresholds (shared with the pipeline's checkpoint params):
+# an edge may glue an OVERSIZED component only if cosine_sim >= the min
+# (a shared IDF-weighted informative token) or align_edit <= the max
+# (near-exact string relation: typo / merge / designator variant).
+EVIDENCE_MIN_COSINE = 0.05
+EVIDENCE_MAX_ALIGN = 1.0
+
+# Passes of the subsumption attach, so chains of subsumed forms resolve.
+ATTACH_ROUNDS = 3
+
+
+def _evidence_cond(c: str, al: str) -> "F.Column":
+    """The evidence condition over columns ``c`` (cosine) and ``al``
+    (align edit); a NULL side never qualifies."""
+    return F.coalesce(
+        (F.col(c) >= F.lit(EVIDENCE_MIN_COSINE))
+        | (F.col(al) <= F.lit(EVIDENCE_MAX_ALIGN)),
+        F.lit(False),
+    )
+
+
+def _has_evidence(c, al) -> bool:
+    """Python twin of :func:`_evidence_cond`."""
+    return (c is not None and c >= EVIDENCE_MIN_COSINE) or (
+        al is not None and al <= EVIDENCE_MAX_ALIGN
+    )
+
 
 def _refine_driver(
     rows: list,
     max_component: int,
     ladder: tuple[float, ...],
-    final_louvain: bool,
-    louvain_max_edges: int = 1_000_000,
-    evidence: tuple[float, float] | None = None,
-    evidence_min_size: int | None = None,
+    louvain_max_edges: int,
+    evidence: bool,
+    evidence_min_size: int | None,
 ) -> dict:
     """Driver-side twin of the distributed refinement: identical labels
     (min-name CC, same ladder semantics, same Louvain with the subgraph's
     own 2m).  ``rows`` is the collected (src, dst, prob, cosine, align,
     margin) edge list (evidence/margin entries None when the frame has no
-    such columns); ``evidence`` is (min_cosine, max_align) or None to skip
-    the rung.  Ladder rungs above :data:`MARGIN_RUNG_MIN_PROB` compare the
-    margin against logit(t) when a margin is present — identical decision
-    to raw-probability >= t, immune to the 4dp rounding of the persisted
+    such columns); ``evidence`` runs the evidence rung.  Ladder rungs
+    above :data:`MARGIN_RUNG_MIN_PROB` compare the margin against
+    logit(t) when a margin is present — identical decision to
+    raw-probability >= t, immune to the 4dp rounding of the persisted
     probability column."""
     from collections import Counter
 
@@ -327,42 +355,37 @@ def _refine_driver(
         comps = split_big(comps, keep)
         if comps is prev:
             break
-    if evidence is not None:
-        cmin, amax = evidence
+    if evidence:
         comps = split_big(
             comps,
-            lambda p, c, al, mg: (c is not None and c >= cmin)
-            or (al is not None and al <= amax),
+            lambda p, c, al, mg: _has_evidence(c, al),
             bound=evidence_min_size,
         )
-    if final_louvain:
-        sizes = Counter(comps.values())
-        big = {lab for lab, c in sizes.items() if c > max_component}
-        if big:
-            from name_matching_spark.operators.louvain import louvain_driver
+    sizes = Counter(comps.values())
+    big = {lab for lab, c in sizes.items() if c > max_component}
+    if big:
+        from name_matching_spark.operators.louvain import louvain_driver
 
-            bign = {n for n, lab in comps.items() if lab in big}
-            internal = sorted(
-                {
-                    (min(a, b), max(a, b))
-                    for a, b, *_ in rows
-                    if a in bign and b in bign and a != b
-                }
-            )
-            # same per-internal-component eligibility gate as the
-            # distributed path: oversized webs keep their ladder labels
-            gcc = cc_local(internal)
-            from collections import Counter as _C
-
-            gedges = _C(gcc[a] for a, _ in internal)
-            ok = {g for g, ne in gedges.items() if ne <= louvain_max_edges}
-            elig = [e for e in internal if gcc[e[0]] in ok]
-            elig_nodes = {n for n, g in gcc.items() if g in ok}
-            labels = louvain_driver(iter(elig)) if elig else {}
-            comps = {
-                n: (labels.get(n, n) if n in elig_nodes else lab)
-                for n, lab in comps.items()
+        bign = {n for n, lab in comps.items() if lab in big}
+        internal = sorted(
+            {
+                (min(a, b), max(a, b))
+                for a, b, *_ in rows
+                if a in bign and b in bign and a != b
             }
+        )
+        # same per-internal-component eligibility gate as the
+        # distributed path: oversized webs keep their ladder labels
+        gcc = cc_local(internal)
+        gedges = Counter(gcc[a] for a, _ in internal)
+        ok = {g for g, ne in gedges.items() if ne <= louvain_max_edges}
+        elig = [e for e in internal if gcc[e[0]] in ok]
+        elig_nodes = {n for n, g in gcc.items() if g in ok}
+        labels = louvain_driver(iter(elig)) if elig else {}
+        comps = {
+            n: (labels.get(n, n) if n in elig_nodes else lab)
+            for n, lab in comps.items()
+        }
     return comps
 
 
@@ -390,12 +413,8 @@ def attach_subsumed(
     src: str = "src",
     dst: str = "dst",
     prob_col: str = "probability",
-    rounds: int = 3,
-    evidence_min_cosine: float | None = None,
-    evidence_max_align: float | None = None,
     singleton_attach: bool = True,
     glue_edges: DataFrame | None = None,
-    absent_attach: str = "best",
 ) -> DataFrame:
     """Post-clustering attachment of subsumption-only names.
 
@@ -408,36 +427,31 @@ def attach_subsumed(
 
     * **comp-absent** (an initial/diminutive form whose every match is
       subsumption): attach to the component of the best-scoring anchored
-      partner — highest probability, ties to the smallest component label.
-      With ``absent_attach="vote"`` the key flips to component-level:
-      the target component with the MOST distinct anchored partners wins
-      (then best probability / margin / smallest label) — inside
-      probability-saturated webs a single 1.0000 edge is a coin flip,
-      while the true entity usually anchors several alias forms that all
-      match the floater.
+      partner — highest probability, then highest raw margin, ties to the
+      smallest component label.
     * **glue singletons** (every glue edge pruned by a refinement rung —
       the name sat inside a confusable web, so its prior of ambiguity is
       exactly why the rung isolated it): attach ONLY on a UNANIMOUS
       evidence vote — every evidence-bearing subsumption edge
-      (``cosine_sim`` >= ``evidence_min_cosine`` or ``align_edit`` <=
-      ``evidence_max_align``, when those columns ride on ``sub_edges``)
-      to an anchored partner must point at ONE component.  Best-p attach
+      (``cosine_sim`` >= :data:`EVIDENCE_MIN_COSINE` or ``align_edit`` <=
+      :data:`EVIDENCE_MAX_ALIGN`; a missing column never qualifies) to an
+      anchored partner must point at ONE component.  Best-p attach
       here crashed 100k pair precision 0.76 -> 0.59 (an ambiguous initial
       form picks one of many same-surname clusters near-randomly);
       unanimity keeps the measured 10k recall recovery while leaving
-      genuinely shared forms singleton.
+      genuinely shared forms singleton.  ``glue_edges``, when given, adds
+      the evidence-bearing glue edges to that vote (glue-only votes need
+      >= 2 distinct anchored partners).
 
     Targets are anchored names only, so attachment maps names INTO
     multi-name components and can never weld two components — and two
-    mutual floaters cannot swap singleton labels.  ``rounds`` passes let
-    chains of subsumed forms ("H KASDRE" whose best partner is the
-    also-subsumed "HELI KASDRE") resolve: an attached floater is anchored
-    for the next round.  Floaters with no (transitively) anchored partner
-    are left for the caller (mutual-floater FAMILIES — an entity observed
-    only as full + initial + diminutive forms — cluster among themselves
-    in :func:`subsumption_aware_components`)."""
-    has_cos = "cosine_sim" in sub_edges.columns
-    has_al = "align_edit" in sub_edges.columns
+    mutual floaters cannot swap singleton labels.  :data:`ATTACH_ROUNDS`
+    passes let chains of subsumed forms ("H KASDRE" whose best partner is
+    the also-subsumed "HELI KASDRE") resolve: an attached floater is
+    anchored for the next round.  Floaters with no (transitively) anchored
+    partner are left for the caller (mutual-floater FAMILIES — an entity
+    observed only as full + initial + diminutive forms — cluster among
+    themselves in :func:`subsumption_aware_components`)."""
     null_d = F.lit(None).cast("double")
 
     def _side(frame: DataFrame, a: str, b: str) -> DataFrame:
@@ -464,22 +478,8 @@ def attach_subsumed(
         if glue_edges is not None
         else None
     )
-    # NULL-safe disjunction (a NULL side never qualifies), byte-matching
-    # the driver twin's `_ev`; with no evidence columns or thresholds at
-    # all the gate is inert (every edge votes).
-    gate_active = (evidence_min_cosine is not None or evidence_max_align is not None) and (
-        has_cos or has_al
-    )
-    if gate_active:
-        ev_cond = F.lit(False)
-        if evidence_min_cosine is not None:
-            ev_cond = ev_cond | (F.col("c") >= F.lit(evidence_min_cosine))
-        if evidence_max_align is not None:
-            ev_cond = ev_cond | (F.col("al") <= F.lit(evidence_max_align))
-        ev_cond = F.coalesce(ev_cond, F.lit(False))
-    else:
-        ev_cond = F.lit(True)
-    for _ in range(max(rounds, 1)):
+    ev_cond = _evidence_cond("c", "al")
+    for _ in range(ATTACH_ROUNDS):
         anchored = _anchored(comp)
         floaters = (
             e.select("name")
@@ -497,50 +497,23 @@ def attach_subsumed(
             ),
             "other",
         )
-        absent_cand = cand.where(F.col("_sing").isNull())
-        if absent_attach == "vote":
-            # component-level vote: most distinct anchored partners first,
-            # then best p / margin / smallest label — byte-matching the
-            # driver twin's vote key
-            absent_best = (
-                absent_cand.groupBy("name", "_tc")
-                .agg(
-                    F.count_distinct("other").alias("_nv"),
-                    F.max("p").alias("_bp"),
-                    F.max(
-                        F.coalesce(F.col("mg"), F.lit(float("-inf")))
-                    ).alias("_bm"),
-                )
-                .groupBy("name")
-                .agg(
-                    F.min_by(
-                        "_tc",
-                        F.struct(
-                            -F.col("_nv"),
-                            -F.col("_bp"),
-                            -F.col("_bm"),
-                            F.col("_tc"),
-                        ),
-                    ).alias("component")
-                )
+        absent_best = (
+            cand.where(F.col("_sing").isNull())
+            .groupBy("name")
+            .agg(
+                # probability first, raw margin as the tiebreak (the
+                # 4dp-rounded p ties across saturated webs; a missing
+                # margin sorts last) — byte-matching the driver twin's key
+                F.min_by(
+                    "_tc",
+                    F.struct(
+                        -F.col("p"),
+                        -F.coalesce(F.col("mg"), F.lit(float("-inf"))),
+                        F.col("_tc"),
+                    ),
+                ).alias("component")
             )
-        else:
-            absent_best = (
-                absent_cand.groupBy("name")
-                .agg(
-                    # probability first, raw margin as the tiebreak (the
-                    # 4dp-rounded p ties across saturated webs; a missing
-                    # margin sorts last) — byte-matching the driver twin's key
-                    F.min_by(
-                        "_tc",
-                        F.struct(
-                            -F.col("p"),
-                            -F.coalesce(F.col("mg"), F.lit(float("-inf"))),
-                            F.col("_tc"),
-                        ),
-                    ).alias("component")
-                )
-            )
+        )
         if singleton_attach:
             sing_pool = cand.where(F.col("_sing") & ev_cond).select(
                 "name", "other", "_tc", F.lit(1).alias("_sub")
@@ -620,19 +593,21 @@ def subsumption_aware_components(
     src: str = "src",
     dst: str = "dst",
     prob_col: str = "probability",
-    attach_rounds: int = 3,
+    max_component: int = 100,
+    ladder: tuple[float, ...] = (0.90, 0.95, 0.99),
+    driver_max_edges: int = 1_000_000,
+    louvain_max_edges: int = 1_000_000,
+    evidence_min_size: int | None = None,
     singleton_attach: bool = True,
     singleton_vote_glue: bool = True,
-    absent_attach: str = "best",
-    **refine_kw,
 ) -> DataFrame:
     """The full subsumption-aware clustering composition:
 
     1. :func:`refined_components` over the GLUE edges only (subsumption
        edges — :func:`subsumption_edge_cond` — excluded);
     2. :func:`attach_subsumed`: subsumption-only names attach to their
-       best clustered partner's component (``attach_rounds`` passes so
-       chains resolve);
+       best clustered partner's component (:data:`ATTACH_ROUNDS` passes
+       so chains resolve);
     3. residual subsumption families whose members have NO clustered
        partner anywhere (an entity observed only as full + initial +
        diminutive forms has no glue-shaped pair at all) are clustered
@@ -656,13 +631,23 @@ def subsumption_aware_components(
     the whole composition (split, refine, attach rounds, residual) runs
     driver-side in one collect — the distributed path is ~15 Spark jobs
     of pure scheduling overhead on a graph that fits in memory.  Labels
-    are identical (the driver twin mirrors each step's tie-breaks)."""
+    are identical (the driver twin mirrors each step's tie-breaks).
+
+    The refinement parameters (``max_component`` .. ``evidence_min_size``)
+    are :func:`refined_components`'s, applied to every refinement step."""
+    refine_kw = dict(
+        src=src,
+        dst=dst,
+        prob_col=prob_col,
+        max_component=max_component,
+        ladder=ladder,
+        driver_max_edges=driver_max_edges,
+        louvain_max_edges=louvain_max_edges,
+        evidence_min_size=evidence_min_size,
+    )
     if not {"token_weakest_link", "align_edit"} <= set(matches.columns):
         # no subsumption evidence on this frame — plain refinement
-        return refined_components(
-            matches, src=src, dst=dst, prob_col=prob_col, **refine_kw
-        )
-    driver_max_edges = refine_kw.get("driver_max_edges", 1_000_000)
+        return refined_components(matches, **refine_kw)
     m = matches.select(
         F.col(src).alias("src"),
         F.col(dst).alias("dst"),
@@ -679,24 +664,18 @@ def subsumption_aware_components(
     collected = _collect_bounded(m, driver_max_edges)
     if collected is not None:
         rows = [t for t in collected if t[0] != t[1]]
+        refine = functools.partial(
+            _refine_driver,
+            max_component=max_component,
+            ladder=tuple(ladder),
+            louvain_max_edges=louvain_max_edges,
+            # refined_components runs the evidence rung only on a frame
+            # carrying both evidence columns
+            evidence="cosine_sim" in matches.columns,
+            evidence_min_size=evidence_min_size,
+        )
         labels = _subsumption_aware_driver(
-            rows,
-            max_component=refine_kw.get("max_component", 100),
-            ladder=tuple(refine_kw.get("ladder", (0.90, 0.95, 0.99))),
-            final_louvain=refine_kw.get("final_louvain", True),
-            louvain_max_edges=refine_kw.get("louvain_max_edges", 1_000_000),
-            evidence_rung=refine_kw.get("evidence_rung", True),
-            evidence_min_cosine=refine_kw.get(
-                "evidence_min_cosine", EVIDENCE_MIN_COSINE
-            ),
-            evidence_max_align=refine_kw.get(
-                "evidence_max_align", EVIDENCE_MAX_ALIGN
-            ),
-            evidence_min_size=refine_kw.get("evidence_min_size"),
-            attach_rounds=attach_rounds,
-            singleton_attach=singleton_attach,
-            singleton_vote_glue=singleton_vote_glue,
-            absent_attach=absent_attach,
+            rows, refine, singleton_attach, singleton_vote_glue
         )
         node_t = m.schema["src"].dataType
         return labels_frame(
@@ -705,23 +684,15 @@ def subsumption_aware_components(
     is_sub = subsumption_edge_cond()
     glue = matches.where(~is_sub)
     sub = matches.where(is_sub)
-    comp = refined_components(
-        glue, src=src, dst=dst, prob_col=prob_col, **refine_kw
-    )
+    comp = refined_components(glue, **refine_kw)
     comp = attach_subsumed(
         comp,
         sub,
         src=src,
         dst=dst,
         prob_col=prob_col,
-        rounds=attach_rounds,
-        evidence_min_cosine=refine_kw.get(
-            "evidence_min_cosine", EVIDENCE_MIN_COSINE
-        ),
-        evidence_max_align=refine_kw.get("evidence_max_align", EVIDENCE_MAX_ALIGN),
         singleton_attach=singleton_attach,
         glue_edges=glue if singleton_vote_glue else None,
-        absent_attach=absent_attach,
     )
     # Mutual-floater families: subsumption edges both of whose endpoints
     # stayed un-anchored through every attach round (comp-absent OR glue
@@ -736,9 +707,7 @@ def subsumption_aware_components(
         anames.withColumnRenamed("name", src), src, "left_anti"
     ).join(anames.withColumnRenamed("name", dst), dst, "left_anti")
     if residual.limit(1).count() > 0:
-        rlab = refined_components(
-            residual, src=src, dst=dst, prob_col=prob_col, **refine_kw
-        )
+        rlab = refined_components(residual, **refine_kw)
         comp = comp.join(rlab.select("name"), "name", "left_anti").unionByName(
             rlab
         )
@@ -753,53 +722,29 @@ def _is_sub_row(twl, al) -> bool:
 
 def _subsumption_aware_driver(
     rows: list,
-    max_component: int,
-    ladder: tuple[float, ...],
-    final_louvain: bool,
-    louvain_max_edges: int,
-    evidence_rung: bool,
-    evidence_min_cosine: float,
-    evidence_max_align: float,
-    attach_rounds: int,
-    evidence_min_size: int | None = None,
-    singleton_attach: bool = True,
-    singleton_vote_glue: bool = True,
-    absent_attach: str = "best",
+    refine,
+    singleton_attach: bool,
+    singleton_vote_glue: bool,
 ) -> dict:
     """Driver twin of the distributed composition.  ``rows``:
     (src, dst, p, cosine, align, twl, margin) tuples, self-loops
-    pre-dropped."""
-    from collections import defaultdict
+    pre-dropped; ``refine``: the :func:`_refine_driver` to run on an edge
+    list."""
+    from collections import Counter, defaultdict
 
     glue = [(a, b, p, c, al, mg) for a, b, p, c, al, twl, mg in rows
             if not _is_sub_row(twl, al)]
     sub = [(a, b, p, c, al, mg) for a, b, p, c, al, twl, mg in rows
            if _is_sub_row(twl, al)]
-    comp = _refine_driver(
-        glue,
-        max_component,
-        ladder,
-        final_louvain,
-        louvain_max_edges,
-        evidence=(evidence_min_cosine, evidence_max_align)
-        if evidence_rung
-        else None,
-        evidence_min_size=evidence_min_size,
-    )
+    comp = refine(glue)
     # attach rounds (driver twin of attach_subsumed): anchored = member of
     # a >= 2-name component; comp-absent floaters attach to the best
     # anchored partner (max prob, min component); rung-pruned glue
     # singletons attach only on a UNANIMOUS evidence-bearing vote
-    from collections import Counter
 
     def anchored_names(c: dict) -> set:
         sz = Counter(c.values())
         return {n for n, lab in c.items() if sz[lab] >= 2}
-
-    def _ev(c, al) -> bool:
-        return (c is not None and c >= evidence_min_cosine) or (
-            al is not None and al <= evidence_max_align
-        )
 
     adj: dict = defaultdict(list)
     for a, b, p, c, al, mg in sub:
@@ -817,7 +762,7 @@ def _subsumption_aware_driver(
             gadj[a].append((p, b, c, al, mg))
             gadj[b].append((p, a, c, al, mg))
     _NEG_INF = float("-inf")
-    for _ in range(max(attach_rounds, 1)):
+    for _ in range(ATTACH_ROUNDS):
         anc = anchored_names(comp)
         newly = {}
         vote_names = set(adj) | set(gadj)
@@ -830,12 +775,12 @@ def _subsumption_aware_driver(
                     sub_t = {
                         comp[o]
                         for p, o, c, al, mg in lst
-                        if o in anc and _ev(c, al)
+                        if o in anc and _has_evidence(c, al)
                     }
                     glue_partners = {
                         o
                         for p, o, c, al, mg in gadj.get(n, [])
-                        if o in anc and _ev(c, al)
+                        if o in anc and _has_evidence(c, al)
                     }
                     glue_t = {comp[o] for o in glue_partners}
                     tcs = sub_t | glue_t
@@ -844,31 +789,6 @@ def _subsumption_aware_driver(
                     # one FP glue edge is trivially "unanimous"
                     if len(tcs) == 1 and (sub_t or len(glue_partners) >= 2):
                         newly[n] = min(tcs)
-                continue
-            if absent_attach == "vote":
-                # component-level vote (distributed twin: the _nv/_bp/_bm
-                # aggregate): most distinct anchored partners first, then
-                # best p / margin / smallest label
-                per_tc: dict = {}
-                for p, o, c, al, mg in lst:
-                    if o not in anc:
-                        continue
-                    tc = comp[o]
-                    nv, bp, bm, ps = per_tc.get(tc, (0, _NEG_INF, _NEG_INF, set()))
-                    if o not in ps:
-                        ps.add(o)
-                        nv += 1
-                    per_tc[tc] = (
-                        nv,
-                        max(bp, p),
-                        max(bm, mg if mg is not None else _NEG_INF),
-                        ps,
-                    )
-                if per_tc:
-                    newly[n] = min(
-                        (-nv, -bp, -bm, tc)
-                        for tc, (nv, bp, bm, _ps) in per_tc.items()
-                    )[3]
                 continue
             best = None
             for p, o, c, al, mg in lst:
@@ -896,28 +816,8 @@ def _subsumption_aware_driver(
         if a not in anc and b not in anc
     ]
     if residual:
-        comp.update(
-            _refine_driver(
-                residual,
-                max_component,
-                ladder,
-                final_louvain,
-                louvain_max_edges,
-                evidence=(evidence_min_cosine, evidence_max_align)
-                if evidence_rung
-                else None,
-                evidence_min_size=evidence_min_size,
-            )
-        )
+        comp.update(refine(residual))
     return comp
-
-
-# Evidence-rung defaults (shared with the pipeline's checkpoint params):
-# an edge may glue an OVERSIZED component only if cosine_sim >= the min
-# (a shared IDF-weighted informative token) or align_edit <= the max
-# (near-exact string relation: typo / merge / designator variant).
-EVIDENCE_MIN_COSINE = 0.05
-EVIDENCE_MAX_ALIGN = 1.0
 
 # Anchors for the scale-adaptive ladder cap under a SHORT ladder (no
 # margin rung above MARGIN_RUNG_MIN_PROB): the THREE-fixture knob sweep
@@ -983,12 +883,8 @@ def refined_components(
     prob_col: str = "probability",
     max_component: int = 100,
     ladder: tuple[float, ...] = (0.90, 0.95, 0.99),
-    final_louvain: bool = True,
     driver_max_edges: int = 1_000_000,
     louvain_max_edges: int = 1_000_000,
-    evidence_rung: bool = True,
-    evidence_min_cosine: float = EVIDENCE_MIN_COSINE,
-    evidence_max_align: float = EVIDENCE_MAX_ALIGN,
     evidence_min_size: int | None = None,
 ) -> DataFrame:
     """Connected components with per-component threshold refinement — the
@@ -1012,15 +908,16 @@ def refined_components(
        singletons;
     3. repeat up the ladder until every component fits the cap or the
        ladder is exhausted;
-    3b. EVIDENCE rung (``evidence_rung=True``, needs ``cosine_sim`` /
-       ``align_edit`` columns on ``matches`` — the scorer always emits
-       them): probability saturates on corpus-scale confusable webs (the
-       GBM emits 1.0000 for thousands of cross-entity pairs), so inside
-       still-oversized components an edge survives only with distinctive
-       shared evidence — an IDF-weighted shared token (cosine) or a
-       near-exact string relation (align_edit <= 1).  ``evidence_min_size``
-       (default None = ``max_component``) lowers the size at which THIS
-       rung applies: the measured FP mass at fixture scale sits in
+    3b. EVIDENCE rung (runs when ``matches`` carries ``cosine_sim`` and
+       ``align_edit`` — the scorer always emits them): probability
+       saturates on corpus-scale confusable webs (the GBM emits 1.0000
+       for thousands of cross-entity pairs), so inside still-oversized
+       components an edge survives only with distinctive shared evidence
+       — an IDF-weighted shared token (cosine) or a near-exact string
+       relation (align_edit <= 1; see :data:`EVIDENCE_MIN_COSINE` /
+       :data:`EVIDENCE_MAX_ALIGN`).  ``evidence_min_size`` (default
+       None = ``max_component``) lowers the size at which THIS rung
+       applies: the measured FP mass at fixture scale sits in
        SMALL mixed clusters (3-5 names) glued by evidence-free
        0.95-0.99 edges that never face the ladder — see
        BENCH/QUALITY.md;
@@ -1028,15 +925,15 @@ def refined_components(
        genuinely-confusable high-probability aliases (shared surnames,
        initial forms, org cores differing only in designators) — exactly
        the structure the reference's Louvain step slices along community
-       boundaries.  With ``final_louvain=True`` (default) those residual
-       components are re-clustered by the per-component distributed
-       Louvain (operators/louvain.py), cutting the weak ties between
-       dense alias cliques that transitive closure cannot.
+       boundaries.  Those residual components are re-clustered by the
+       per-component distributed Louvain (operators/louvain.py), cutting
+       the weak ties between dense alias cliques that transitive closure
+       cannot.
 
     Each rung runs CC on a strictly smaller edge set, so the extra cost
     is bounded by ``len(ladder)`` CC runs plus one Louvain pass over the
     suspect subgraphs only.  Residual components whose INTERNAL edge
-    count exceeds ``driver_max_edges`` are left at their ladder result
+    count exceeds ``louvain_max_edges`` are left at their ladder result
     rather than crashing Louvain's per-component gate — a dense web
     bigger than that is kept, loudly countable in the component-size
     metrics, not silently split or a stage failure.  Labels stay
@@ -1071,9 +968,7 @@ def refined_components(
     # the distributed path (parity-tested).  The gate probe is a
     # limit-count — no materialization of the full edge list just to
     # count it.
-    has_evidence = evidence_rung and {"cosine_sim", "align_edit"} <= set(
-        matches.columns
-    )
+    has_evidence = {"cosine_sim", "align_edit"} <= set(matches.columns)
     ev_cols = (
         [F.col("cosine_sim").alias("c"), F.col("align_edit").alias("al")]
         if has_evidence
@@ -1103,12 +998,9 @@ def refined_components(
             rows,
             max_component,
             ladder,
-            final_louvain,
             louvain_max_edges,
-            evidence=(evidence_min_cosine, evidence_max_align)
-            if has_evidence
-            else None,
-            evidence_min_size=evidence_min_size,
+            has_evidence,
+            evidence_min_size,
         )
         spark = matches.sparkSession
         node_t = m.schema["src"].dataType
@@ -1188,60 +1080,58 @@ def refined_components(
     if has_evidence:
         comp, _ = _split_big(
             comp,
-            (F.col("cosine_sim") >= F.lit(evidence_min_cosine))
-            | (F.col("align_edit") <= F.lit(evidence_max_align)),
+            _evidence_cond("cosine_sim", "align_edit"),
             bound=evidence_min_size,
         )
-    if final_louvain:
-        sizes = comp.groupBy("component").agg(F.count("*").alias("n"))
-        big = sizes.where(F.col("n") > max_component).select("component")
-        if big.limit(1).count() > 0:
-            from name_matching_spark.operators.louvain import louvain_communities
+    sizes = comp.groupBy("component").agg(F.count("*").alias("n"))
+    big = sizes.where(F.col("n") > max_component).select("component")
+    if big.limit(1).count() > 0:
+        from name_matching_spark.operators.louvain import louvain_communities
 
-            # Louvain eligibility: partition the internal subgraph (base
-            # edges among residual-big members) by ITS OWN connected
-            # components — the same unit louvain_communities gates on —
-            # and send only components whose edge count fits the gate.
-            # Oversized webs keep their ladder labels; the guard never
-            # raises.  Ladder components stay atomic under the name-level
-            # swap: each one is internally connected, so it lies wholly
-            # inside one internal-graph component.
-            big_names = _ckpt(comp.join(big, "component", "left_semi"))
-            bn = big_names.select("name")
-            internal = _ckpt(
-                _canon_edges(
-                    edges.join(
-                        bn.withColumnRenamed("name", "src"), "src", "left_semi"
-                    ).join(bn.withColumnRenamed("name", "dst"), "dst", "left_semi"),
-                    "src",
-                    "dst",
-                ).select(F.col("lo").alias("src"), F.col("hi").alias("dst"))
-            )
-            icc = _ckpt(connected_components(internal))
-            ic = internal.join(
-                icc.select(F.col("name").alias("src"), F.col("component").alias("gid")),
+        # Louvain eligibility: partition the internal subgraph (base
+        # edges among residual-big members) by ITS OWN connected
+        # components — the same unit louvain_communities gates on —
+        # and send only components whose edge count fits the gate.
+        # Oversized webs keep their ladder labels; the guard never
+        # raises.  Ladder components stay atomic under the name-level
+        # swap: each one is internally connected, so it lies wholly
+        # inside one internal-graph component.
+        big_names = _ckpt(comp.join(big, "component", "left_semi"))
+        bn = big_names.select("name")
+        internal = _ckpt(
+            _canon_edges(
+                edges.join(
+                    bn.withColumnRenamed("name", "src"), "src", "left_semi"
+                ).join(bn.withColumnRenamed("name", "dst"), "dst", "left_semi"),
                 "src",
-            )
-            ok_gids = (
-                ic.groupBy("gid")
-                .agg(F.count("*").alias("ne"))
-                .where(F.col("ne") <= louvain_max_edges)
-                .select("gid")
-            )
-            elig_edges = _ckpt(
-                ic.join(ok_gids, "gid", "left_semi").select("src", "dst")
-            )
-            elig_names = icc.join(
-                ok_gids.withColumnRenamed("gid", "component"), "component", "left_semi"
-            ).select("name")
-            sub = louvain_communities(elig_edges, max_edges=louvain_max_edges)
-            singles = (
-                elig_names.join(sub.select("name"), "name", "left_anti")
-                .select("name", F.col("name").alias("component"))
-            )
-            comp = _ckpt(
-                comp.join(elig_names, "name", "left_anti")
-                .unionByName(sub)
-                .unionByName(singles)
-            )
+                "dst",
+            ).select(F.col("lo").alias("src"), F.col("hi").alias("dst"))
+        )
+        icc = _ckpt(connected_components(internal))
+        ic = internal.join(
+            icc.select(F.col("name").alias("src"), F.col("component").alias("gid")),
+            "src",
+        )
+        ok_gids = (
+            ic.groupBy("gid")
+            .agg(F.count("*").alias("ne"))
+            .where(F.col("ne") <= louvain_max_edges)
+            .select("gid")
+        )
+        elig_edges = _ckpt(
+            ic.join(ok_gids, "gid", "left_semi").select("src", "dst")
+        )
+        elig_names = icc.join(
+            ok_gids.withColumnRenamed("gid", "component"), "component", "left_semi"
+        ).select("name")
+        sub = louvain_communities(elig_edges, max_edges=louvain_max_edges)
+        singles = (
+            elig_names.join(sub.select("name"), "name", "left_anti")
+            .select("name", F.col("name").alias("component"))
+        )
+        comp = _ckpt(
+            comp.join(elig_names, "name", "left_anti")
+            .unionByName(sub)
+            .unionByName(singles)
+        )
     return _done(comp)

@@ -69,15 +69,6 @@ def get_spark(
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
-        # FAIR with no pools: there is no allocation file and no thread sets
-        # spark.scheduler.pool, so every job from every thread (the
-        # pipeline's TF-IDF fit / blocking / metrics overlap included)
-        # lands in the one "default" pool, whose jobs run FIFO: the same
-        # order as spark.scheduler.mode=FIFO.  It does NOT keep a
-        # critical-path job from queueing behind a background job, and the
-        # window med 4.49 -> 3.77 s measured when it was added is not its
-        # doing.  Kept unchanged until a measured change removes it.
-        .config("spark.scheduler.mode", "FAIR")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

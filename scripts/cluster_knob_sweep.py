@@ -69,20 +69,18 @@ def main() -> None:
         _LM3 = _L + (0.9999, 0.99999, 0.999999)
         if len(sys.argv) > 2:
             # cap-only sweep: `python scripts/cluster_knob_sweep.py 300000 5,6,7,8
-            # [lm2|lm2vg]` — optional third arg switches to the margin-rung
+            # [lm2]` — optional third arg switches to the margin-rung
             # ladder (the third-scale-point validation of refine_max_component
             # ="auto" — VERDICT r4 item 7; lm2 re-anchors it for round 5's
-            # extended default); the "vg" suffix additionally turns on the
-            # glue-edge singleton unanimity vote (singleton_vote_glue).
+            # extended default).  The glue-edge singleton vote is on by
+            # default; scripts/_vg_ab.py is its on/off A/B.
             mode = sys.argv[3] if len(sys.argv) > 3 else ""
-            lad = _LM2 if mode.startswith("lm2") else _L
-            vg = "vg" in mode
-            av = "av" in mode  # absent_attach="vote" (component-level vote)
+            if mode not in ("", "lm2"):
+                raise SystemExit(f"unknown ladder mode {mode!r} (only lm2)")
+            lad = _LM2 if mode == "lm2" else _L
             grid = [
                 {"max_component": int(c), "ladder": lad, "subsume": True,
-                 "evidence_min_size": 2,
-                 **({"singleton_vote_glue": True} if vg else {}),
-                 **({"absent_attach": "vote"} if av else {})}
+                 "evidence_min_size": 2}
                 for c in sys.argv[2].split(",")
             ]
         else:

@@ -1,4 +1,4 @@
-"""Blocking: recall on the labeled positive pairs, purge cap, pair shape."""
+"""Blocking: recall on the labeled positive pairs, hot-block cap, pair shape."""
 
 import pandas as pd
 import pytest
@@ -80,10 +80,24 @@ def test_hot_block_subblocking_recovers_recall(spark):
     # isolate it — at small n the LSH band buckets stay small and would
     # catch every pair through a non-hot route, which is exactly what
     # stops happening at 100k names): each typo pair's ONLY shared key is
-    # the hot token block.  The old purge semantics dropped such pairs
-    # entirely (recall ~0 here); MinHash sub-blocking must recover the
+    # the hot token block.  Dropping hot blocks loses such pairs entirely
+    # (recall ~0 here); MinHash sub-blocking must recover the
     # overwhelming majority (a true pair shares most full-name shingles,
     # so at least one of the 4 secondary rows agrees w.p. 1-(1-J)^4).
+    names_df, want = _hot_typo_pairs(spark)
+    sub = candidate_pairs(names_df, **_HOT_KW)
+    got = {(r["name_x"], r["name_y"]) for r in sub.collect()}
+    recall = len(want & got) / len(want)
+    assert recall >= 0.85, f"sub-blocking recall {recall:.3f}"
+
+
+_HOT_KW = dict(max_block=5, bands=0, use_metaphone=False)
+
+
+def _hot_typo_pairs(spark):
+    """40 typo pairs whose only shared key (barring soundex collisions)
+    under ``_HOT_KW`` is the hot token block ``tok:LLC``; returns (names
+    frame, canonical truth pairs)."""
     import random
 
     rng = random.Random(13)
@@ -96,18 +110,42 @@ def test_hot_block_subblocking_recovers_recall(spark):
         b = f"{typo} LLC"
         names += [(a,), (b,)]
         want.add((min(a, b), max(a, b)))
-    names_df = spark.createDataFrame(names, ["name"])
-    kw = dict(max_block=5, bands=0, use_metaphone=False)
-    sub = candidate_pairs(names_df, **kw)
-    got = {(r["name_x"], r["name_y"]) for r in sub.collect()}
-    recall = len(want & got) / len(want)
-    assert recall >= 0.85, f"sub-blocking recall {recall:.3f}"
-    # the purge semantics lose most of these pairs (soundex collisions of
-    # random cores are the only non-hot route left)
-    purged = candidate_pairs(names_df, sub_block=False, **kw)
-    got_purge = {(r["name_x"], r["name_y"]) for r in purged.collect()}
-    assert len(want & got_purge) / len(want) < 0.25
-    assert len(want & got_purge) < len(want & got)
+    return spark.createDataFrame(names, ["name"]), want
+
+
+def test_prebuilt_keys_take_sub_rows_from_signature(spark):
+    """A keys frame built with ``sub_rows=2`` yields the same pairs as
+    building the keys inside ``candidate_pairs`` with ``sub_rows=2``: the
+    sub-block rows come from the frame's own signature, not from the
+    ``sub_rows`` default of the call that consumes it."""
+    from name_matching_spark.operators.blocking import materialized_blocking_keys
+
+    names_df, _ = _hot_typo_pairs(spark)
+    keys = materialized_blocking_keys(
+        names_df, sub_rows=2, bands=0, use_metaphone=False
+    )
+    got = candidate_pairs(names_df, keys=keys, max_block=5)
+    want = candidate_pairs(names_df, sub_rows=2, **_HOT_KW)
+    got_rows = {tuple(r) for r in got.collect()}
+    assert got_rows == {tuple(r) for r in want.collect()}
+    assert got_rows
+
+
+def test_keys_without_sizes_or_signature_raise(spark):
+    """``candidate_pairs`` rejects a keys frame lacking ``block_size`` or
+    the sub-block signature ``_ss`` instead of recomputing either."""
+    from name_matching_spark.operators.blocking import (
+        blocking_keys,
+        materialized_blocking_keys,
+    )
+
+    names_df, _ = _hot_typo_pairs(spark)
+    for keys in (
+        materialized_blocking_keys(names_df, sub_rows=0, use_metaphone=False),
+        blocking_keys(names_df, sub_rows=4, use_metaphone=False),
+    ):
+        with pytest.raises(ValueError, match="keys frame lacks"):
+            candidate_pairs(names_df, keys=keys)
 
 
 def test_hot_block_pair_volume_stays_linear(spark):

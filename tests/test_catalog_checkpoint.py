@@ -8,6 +8,7 @@ the write/read/resume semantics are identical."""
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from name_matching_spark.io.checkpoint import CheckpointManager, iceberg_available
@@ -108,3 +109,32 @@ def test_catalog_manifest_is_the_commit_marker(spark, tmp_path):
     ckpt.stage("torn_stage", make, params={"v": 1})
     assert calls["n"] == 2, "torn write was served as a completed stage"
     spark.sql("DROP TABLE IF EXISTS default.torn_stage")
+
+
+@pytest.mark.parametrize("table_format", ["parquet", "catalog"])
+def test_crashed_rerun_leaves_no_stale_manifest(
+    spark, tmp_path, monkeypatch, table_format
+):
+    """A params-B run that dies after overwriting the table but before its
+    manifest lands must not leave params-A's manifest beside B's rows: a
+    params-A rerun then recomputes instead of serving B's rows as A's."""
+    ckpt = CheckpointManager(
+        spark, str(tmp_path / "wh_stale"), table_format=table_format,
+        namespace="default", table_provider="parquet",
+    )
+
+    def make(v):
+        return lambda: spark.range(3).select(F.lit(v).alias("v"))
+
+    ckpt.stage("stale_stage", make("A"), params={"p": "A"})
+
+    def crash(*a, **kw):
+        raise RuntimeError("crashed after the table write")
+
+    monkeypatch.setattr(ckpt, "_partition_lineage", crash)
+    with pytest.raises(RuntimeError, match="crashed"):
+        ckpt.stage("stale_stage", make("B"), params={"p": "B"})
+    monkeypatch.undo()
+    out = ckpt.stage("stale_stage", make("A"), params={"p": "A"})
+    assert {r["v"] for r in out.collect()} == {"A"}
+    spark.sql("DROP TABLE IF EXISTS default.stale_stage")

@@ -362,10 +362,11 @@ def test_singleton_reattach_unanimous_evidence(spark):
 
 
 def test_singleton_vote_glue_reattach(spark):
-    """singleton_vote_glue=True (opt-in): a glue singleton isolated by a
-    rung may re-attach via its evidence-bearing GLUE edges — unanimity
-    over the union of sub + glue evidence edges; conflicting targets
-    still abstain; default-off output is byte-identical without it."""
+    """singleton_vote_glue=True (the default): a glue singleton isolated
+    by a rung may re-attach via its evidence-bearing GLUE edges —
+    unanimity over the union of sub + glue evidence edges; conflicting
+    targets still abstain; with the knob off S stays a singleton and
+    every other label is unchanged."""
     from name_matching_spark.operators.clustering import (
         subsumption_aware_components,
     )
@@ -419,13 +420,46 @@ def test_singleton_vote_glue_reattach(spark):
         assert fast["S"] == (fast["A0"] if vg else "S")
 
 
-def test_absent_attach_vote(spark):
-    """absent_attach="vote" (opt-in): a comp-absent floater attaches to
-    the component with the MOST distinct anchored partners, not the one
-    best-probability edge — inside probability-saturated webs the single
-    1.0000 edge is a coin flip while the true entity anchors several
-    alias forms.  Driver and distributed paths must agree in both modes;
-    default "best" output is unchanged."""
+def test_subsumption_aware_without_cosine_matches_distributed(spark):
+    """A frame with ``align_edit`` and ``token_weakest_link`` but no
+    ``cosine_sim`` skips the evidence rung on both paths, as
+    refined_components does: an oversized glue 4-clique whose only
+    near-exact edges are X0-X1 and X2-X3 stays whole under Louvain
+    instead of being split by an align-only evidence rung."""
+    from name_matching_spark.operators.clustering import (
+        subsumption_aware_components,
+    )
+
+    names = ["X0", "X1", "X2", "X3"]
+    rows = [
+        (a, b, 0.95, 0.0 if {a, b} in ({"X0", "X1"}, {"X2", "X3"}) else 3.0, 0.9)
+        for i, a in enumerate(names)
+        for b in names[i + 1:]
+    ]
+    m = spark.createDataFrame(
+        rows,
+        "src string, dst string, probability double, align_edit double, "
+        "token_weakest_link double",
+    )
+    kw = dict(max_component=3, ladder=(0.90,))
+    fast = {
+        r["name"]: r["component"]
+        for r in subsumption_aware_components(m, **kw).collect()
+    }
+    dist = {
+        r["name"]: r["component"]
+        for r in subsumption_aware_components(
+            m, driver_max_edges=0, **kw
+        ).collect()
+    }
+    assert fast == dist
+    assert set(fast.values()) == {"X0"}
+
+
+def test_absent_attach_best_partner(spark):
+    """A comp-absent floater attaches to the component of its single
+    best-probability anchored partner, even when another component holds
+    more of its partners.  Driver and distributed paths must agree."""
     from name_matching_spark.operators.clustering import (
         subsumption_aware_components,
     )
@@ -439,7 +473,7 @@ def test_absent_attach_vote(spark):
     rows.append(("F", "A0", 1.0, 0.0, 4.0, 1.0, 9.0))
     rows.append(("F", "B0", 0.99, 0.0, 4.0, 1.0, 8.0))
     rows.append(("F", "B1", 0.99, 0.0, 4.0, 1.0, 8.0))
-    # floater G: single edge either way — both modes pick the best edge
+    # floater G: a single edge
     rows.append(("G", "A1", 0.98, 0.0, 4.0, 1.0, 7.0))
     m = spark.createDataFrame(
         rows,
@@ -447,22 +481,19 @@ def test_absent_attach_vote(spark):
         "align_edit double, token_weakest_link double, margin double",
     )
     kw = dict(max_component=6, ladder=(0.90, 0.95))
-    for mode, want in (("best", "A0"), ("vote", "B0")):
-        fast = {
-            r["name"]: r["component"]
-            for r in subsumption_aware_components(
-                m, absent_attach=mode, **kw
-            ).collect()
-        }
-        dist = {
-            r["name"]: r["component"]
-            for r in subsumption_aware_components(
-                m, absent_attach=mode, driver_max_edges=0, **kw
-            ).collect()
-        }
-        assert fast == dist
-        assert fast["F"] == fast[want]
-        assert fast["G"] == fast["A1"]
+    fast = {
+        r["name"]: r["component"]
+        for r in subsumption_aware_components(m, **kw).collect()
+    }
+    dist = {
+        r["name"]: r["component"]
+        for r in subsumption_aware_components(
+            m, driver_max_edges=0, **kw
+        ).collect()
+    }
+    assert fast == dist
+    assert fast["F"] == fast["A0"] != fast["B0"]
+    assert fast["G"] == fast["A1"]
 
 
 def test_resolve_auto_cap_rule():
